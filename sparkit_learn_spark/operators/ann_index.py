@@ -3,15 +3,17 @@
 Every ``q_llm_ann*`` query so far retrains its quantizer/codebooks per
 call — fine for a benchmark row, wrong for production: a 100 TB
 similarity service amortizes ONE index build across thousands of query
-batches. This module persists the faiss-style IVF-PQ layout as plain
-parquet under a directory (the :mod:`bucketing` pattern: pay the
-expensive pass once at write time, reuse it exchange-free after):
+batches. This module persists the faiss-style IVF-PQ layout under a
+directory (the :mod:`bucketing` pattern: pay the expensive pass once
+at write time, reuse it exchange-free after):
 
-  {path}/meta/       one row: n_lists, m_subspaces, n_codes, d,
-                     n_vectors, seed, source_fingerprint
-  {path}/centroids/  (list_id, c array<double>)        — n_lists rows
-  {path}/codebooks/  (subspace, code, w array<double>) — m·n_codes rows
-  {path}/codes/      (id, codes array<long>) PARTITIONED BY list_id
+  {path}/_meta.json     n_lists, m_subspaces, n_codes, d, n_vectors,
+                        seed, source_fingerprint
+  {path}/quantizer.npz  C (n_lists × d), books (m × n_codes × d/m)
+  {path}/codes/         (id, codes array<long>) PARTITIONED BY list_id
+
+Meta and quantizer are driver-side files, each committed by an atomic
+replace (:mod:`store_meta`), the quantizer before meta.
 
 ``codes`` is hive-partitioned by list_id so a probe that touches
 n_probe lists READS ONLY THOSE DIRECTORIES — partition pruning makes
@@ -35,6 +37,8 @@ corpus table remains the vector store, faiss's refine-at-search shape.
 from __future__ import annotations
 
 
+import io
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +51,7 @@ from .similarity import (
     _topk_rows,
     auto_ivf_params,
 )
+from .store_meta import commit, require_meta, reuse_or_build, write_meta
 
 
 def _train(vec: DataFrame, n_lists: int, m_subspaces: int, n_codes: int,
@@ -140,7 +145,6 @@ def write_index(emb: DataFrame, path: str, *, n_lists: int | None = None,
     builder, then :func:`merge_indexes` the shard outputs (faiss's
     distributed-build recipe; at 100 TB the encode pass is the
     parallel part and training is one bounded-sample job)."""
-    spark = emb.sparkSession
     vec = _spread(emb.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -162,31 +166,18 @@ def write_index(emb: DataFrame, path: str, *, n_lists: int | None = None,
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(f"{path}/codes"))
 
-    cent = spark.createDataFrame(
-        [(int(i), [float(x) for x in row]) for i, row in enumerate(C)],
-        "list_id int, c array<double>")
-    cent.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    book_rows = [(s, int(c), [float(x) for x in w])
-                 for s, B in enumerate(books) for c, w in enumerate(B)]
-    spark.createDataFrame(
-        book_rows, "subspace int, code int, w array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-
+    _write_quantizer(path, C, books)
     meta = {"n_lists": n_lists, "m_subspaces": m_subspaces,
             "n_codes": n_codes, "d": d, "n_vectors": n_total,
             "seed": seed, "source_fingerprint": source_fingerprint}
-    _write_meta(spark, path, meta)
+    write_meta(path, meta)
     return meta
 
 
-def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    spark.createDataFrame(
-        [(meta["n_lists"], meta["m_subspaces"], meta["n_codes"],
-          meta["d"], meta["n_vectors"], meta["seed"],
-          meta["source_fingerprint"])],
-        "n_lists int, m_subspaces int, n_codes int, d int, "
-        "n_vectors long, seed int, source_fingerprint string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+def _write_quantizer(path: str, C: np.ndarray, books: list) -> None:
+    buf = io.BytesIO()
+    np.savez(buf, C=C, books=np.stack(books))
+    commit(f"{path}/quantizer.npz", buf.getvalue())
 
 
 def append_to_index(emb_batch: DataFrame, path: str, *,
@@ -197,8 +188,8 @@ def append_to_index(emb_batch: DataFrame, path: str, *,
     retraining — the incremental ingest path (faiss ``add`` semantics):
     the batch is encoded against the EXISTING quantizer/codebooks and
     its codes are appended to the hive partitions; meta's count and
-    fingerprint advance atomically-enough for the single-writer
-    contract (the driver pipeline is the only writer).
+    fingerprint then advance in one atomic meta commit (single-writer
+    contract: the driver pipeline is the only writer).
 
     The quantizer is deliberately frozen: appending never changes
     earlier codes, so probes stay reproducible and the append cost is
@@ -238,47 +229,41 @@ def append_to_index(emb_batch: DataFrame, path: str, *,
     if n_actual != n_meta:
         n_present = codes.join(
             vec.select(F.col("vid").alias("id")), "id", "semi").count()
-        if n_actual == n_meta + n_batch and n_present == n_batch:
-            # previous run crashed between the codes append and the
-            # meta commit — the batch is fully on disk; finish the
-            # commit without re-appending
-            meta = dict(meta)
-            meta["n_vectors"] = n_meta + n_batch
-            meta["source_fingerprint"] = new_fingerprint
-            _write_meta(spark, path, meta)
-            return meta
-        raise RuntimeError(
-            f"append_to_index at {path}: codes hold {n_actual} rows "
-            f"but meta records {n_meta} (batch={n_batch}, of which "
-            f"{n_present} already present) — index is inconsistent; "
-            "rebuild it (build_if_stale / write_index)")
-    C, books = read_quantizer(spark, path, meta["m_subspaces"])
-    (_encode_frame(vec, C, books)
-        .repartition("list_id")
-        .write.mode("append").partitionBy("list_id")
-        .parquet(f"{path}/codes"))
-    meta = dict(meta)
-    meta["n_vectors"] = n_meta + n_batch
-    meta["source_fingerprint"] = new_fingerprint
-    _write_meta(spark, path, meta)
+        if n_actual != n_meta + n_batch or n_present != n_batch:
+            raise RuntimeError(
+                f"append_to_index at {path}: codes hold {n_actual} rows "
+                f"but meta records {n_meta} (batch={n_batch}, of which "
+                f"{n_present} already present) — index is inconsistent; "
+                "rebuild it (build_if_stale / write_index)")
+        # previous run crashed between the codes append and the meta
+        # commit — the batch is fully on disk; finish the commit
+        # without re-appending
+    else:
+        C, books = read_quantizer(spark, path, meta["m_subspaces"])
+        (_encode_frame(vec, C, books)
+            .repartition("list_id")
+            .write.mode("append").partitionBy("list_id")
+            .parquet(f"{path}/codes"))
+    meta = dict(meta, n_vectors=n_meta + n_batch,
+                source_fingerprint=new_fingerprint)
+    write_meta(path, meta)
     return meta
 
 
 def load_meta(spark: SparkSession, path: str) -> dict:
-    """The index's meta row (raises if the index does not exist)."""
-    return spark.read.parquet(f"{path}/meta").first().asDict()
+    """The index's meta; FileNotFoundError if there is no index."""
+    return require_meta(path)
 
 
 def read_quantizer(spark: SparkSession, path: str,
                    m_subspaces: int) -> tuple:
     """(centroids ndarray, codebook list) — the driver-side state."""
-    cent = spark.read.parquet(f"{path}/centroids").orderBy(
-        "list_id").collect()
-    C = np.array([r["c"] for r in cent])
-    bk = spark.read.parquet(f"{path}/codebooks").orderBy(
-        "subspace", "code").collect()
-    books = [np.array([r["w"] for r in bk if r["subspace"] == s])
-             for s in range(m_subspaces)]
+    with np.load(f"{path}/quantizer.npz") as z:
+        C, books = z["C"], list(z["books"])
+    if len(books) != m_subspaces:
+        raise ValueError(f"ann_index at {path}: quantizer holds "
+                         f"{len(books)} codebooks, meta records "
+                         f"{m_subspaces} subspaces")
     return C, books
 
 
@@ -318,14 +303,10 @@ def merge_indexes(spark: SparkSession, paths: list[str], out: str, *,
     (codes.repartition("list_id")
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(f"{out}/codes"))
-    spark.read.parquet(f"{paths[0]}/centroids").coalesce(1) \
-        .write.mode("overwrite").parquet(f"{out}/centroids")
-    spark.read.parquet(f"{paths[0]}/codebooks").coalesce(1) \
-        .write.mode("overwrite").parquet(f"{out}/codebooks")
-    meta = dict(metas[0])
-    meta["n_vectors"] = int(sum(m["n_vectors"] for m in metas))
-    meta["source_fingerprint"] = source_fingerprint
-    _write_meta(spark, out, meta)
+    _write_quantizer(out, C0, books0)
+    meta = dict(metas[0], n_vectors=sum(m["n_vectors"] for m in metas),
+                source_fingerprint=source_fingerprint)
+    write_meta(out, meta)
     return meta
 
 
@@ -337,37 +318,16 @@ def build_if_stale(emb: DataFrame, path: str, *,
 
     Builds are serialized by the shared atomic-mkdir build lock
     (r9 ADVICE: two sessions sharing one warehouse dir could
-    interleave overwrite-writes and corrupt the layout). The lock is
-    re-checked after acquisition, so a waiter that blocked behind a
-    builder finds the fresh index and skips its own build. Only the
-    missing-index read error is swallowed; genuine read errors
-    propagate."""
-    from pyspark.errors import AnalysisException
-
-    from .store_lock import build_lock
-
-    spark = emb.sparkSession
-
-    def _fresh() -> dict | None:
-        try:
-            meta = load_meta(spark, path)
-        except AnalysisException as exc:  # missing path -> build
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                return None
-            raise
-        return meta if meta["source_fingerprint"] == source_fingerprint \
-            else None
-
-    meta = _fresh()
-    if meta is not None:
-        return meta, False
-    with build_lock(path, timeout=lock_timeout):
-        meta = _fresh()  # another session may have built while we waited
-        if meta is not None:
-            return meta, False
-        return write_index(emb, path,
-                           source_fingerprint=source_fingerprint,
-                           **build_kw), True
+    interleave overwrite-writes and corrupt the layout); a waiter that
+    blocked behind a builder finds the fresh index and skips its own
+    build. Only a missing meta reads as absent (an index in the
+    earlier parquet-meta layout has none, so it is rebuilt); an
+    unreadable meta raises."""
+    return reuse_or_build(
+        path, source_fingerprint,
+        lambda: write_index(emb, path, source_fingerprint=source_fingerprint,
+                            **build_kw),
+        lock_timeout=lock_timeout)
 
 
 def probe_index(spark: SparkSession, path: str, queries: DataFrame, *,

@@ -7,14 +7,15 @@ ann_index pattern: write once, anti-join many, append survivors —
 so the marginal cost of admitting a batch is batch-sized and the
 corpus text is never re-scanned.
 
-Layout (all parquet under one directory):
+Layout (parquet tables plus one meta file under one directory):
 
   {path}/digests/        (text_sha, run_id)  standing exact-dup keys
   {path}/fingerprints/   (fp, run_id)        standing near-dup keys
   {path}/test_prefixes/  (pfx)               decontamination set
   {path}/runs/           per-run stage stats ledger (run_id + the
                          wave147 5-stage funnel row)
-  {path}/meta/           (source_fingerprint, init_runs)
+  {path}/_meta.json      source_fingerprint, committed last by an
+                         atomic replace (store_meta)
 
 Key tables are SETS consumed only by anti-joins, so duplicate rows
 are semantically harmless — which makes appends crash-tolerant
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from .store_meta import require_meta, write_meta
 
 #: defaults matching wave147's funnel contract.
 MIN_TOKENS = 30
@@ -92,13 +94,12 @@ def _init_store_locked(history: DataFrame, test_docs: DataFrame,
         .write.mode("overwrite").parquet(f"{path}/test_prefixes"))
     spark.createDataFrame([], RUN_STATS_SCHEMA) \
         .write.mode("overwrite").parquet(f"{path}/runs")
-    spark.createDataFrame([(source_fingerprint,)],
-                          "source_fingerprint string") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(path, {"source_fingerprint": source_fingerprint})
 
 
 def load_store_meta(spark: SparkSession, path: str) -> dict:
-    return spark.read.parquet(f"{path}/meta").first().asDict()
+    """The store's meta; FileNotFoundError if there is no store."""
+    return require_meta(path)
 
 
 def recorded_runs(spark: SparkSession, path: str) -> DataFrame:

@@ -20,8 +20,8 @@ Layout:
                  partial append (the funnel_store discipline). Band
                  rows feed DISTINCT candidate pairs, so duplicate
                  appends are semantically harmless.
-  {path}/meta/   (n_hashes, band_rows, shingle_k, n_docs,
-                  source_fingerprint)
+  {path}/_meta.json  n_hashes, band_rows, shingle_k, n_docs,
+                     source_fingerprint (atomic replace, store_meta)
 
 Portability: signatures use the repo's cross-engine hash convention —
 md5-prefix base (7 hex chars → BIGINT, overflow-safe) through the 16-member affine
@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
+from .store_meta import require_meta, reuse_or_build, write_meta
 
 #: portable affine family over the 32-bit ring — MUST stay in sync
 #: with queries/wave52.py's _MH (the cross-engine-verified family).
@@ -98,17 +99,9 @@ def doc_bands(docs: DataFrame, *, band_rows: int = BAND_ROWS,
     )
 
 
-def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    spark.createDataFrame(
-        [(meta["n_hashes"], meta["band_rows"], meta["shingle_k"],
-          meta["n_docs"], meta["source_fingerprint"])],
-        "n_hashes int, band_rows int, shingle_k int, n_docs long, "
-        "source_fingerprint string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-
-
 def load_meta(spark: SparkSession, path: str) -> dict:
-    return spark.read.parquet(f"{path}/meta").first().asDict()
+    """The index's meta; FileNotFoundError if there is no index."""
+    return require_meta(path)
 
 
 def build_neardup_index(docs: DataFrame, path: str, *,
@@ -126,7 +119,7 @@ def build_neardup_index(docs: DataFrame, path: str, *,
     meta = {"n_hashes": N_HASHES, "band_rows": band_rows,
             "shingle_k": k, "n_docs": n_docs,
             "source_fingerprint": source_fingerprint}
-    _write_meta(spark, path, meta)
+    write_meta(path, meta)
     return meta
 
 
@@ -134,38 +127,17 @@ def build_neardup_if_stale(docs: DataFrame, path: str, *,
                            source_fingerprint: str,
                            lock_timeout: float = 600.0,
                            **kw) -> tuple[dict, bool]:
-    """(meta, rebuilt) — the build-once-probe-many entry (only the
-    missing-path read error is swallowed). Builds are serialized by
-    the shared atomic-mkdir lock (ADVICE r10: ann_index gained it in
-    r9 for the identical two-writers-one-warehouse hazard) and the
-    staleness check re-runs after acquisition, so a waiter that
-    blocked behind a builder reuses the fresh index."""
-    from pyspark.errors import AnalysisException
-
-    from .store_lock import build_lock
-
-    spark = docs.sparkSession
-
-    def _fresh() -> dict | None:
-        try:
-            meta = load_meta(spark, path)
-        except AnalysisException as exc:
-            if ("PATH_NOT_FOUND" in str(exc)
-                    or "Path does not exist" in str(exc)):
-                return None
-            raise
-        return meta if meta["source_fingerprint"] == source_fingerprint \
-            else None
-
-    meta = _fresh()
-    if meta is not None:
-        return meta, False
-    with build_lock(path, timeout=lock_timeout):
-        meta = _fresh()
-        if meta is not None:
-            return meta, False
-        return build_neardup_index(
-            docs, path, source_fingerprint=source_fingerprint, **kw), True
+    """(meta, rebuilt) — the build-once-probe-many entry (only a
+    missing meta reads as absent; an unreadable one raises). Builds
+    are serialized by the shared atomic-mkdir lock (ADVICE r10:
+    ann_index gained it in r9 for the identical
+    two-writers-one-warehouse hazard), so a waiter that blocked behind
+    a builder reuses the fresh index."""
+    return reuse_or_build(
+        path, source_fingerprint,
+        lambda: build_neardup_index(
+            docs, path, source_fingerprint=source_fingerprint, **kw),
+        lock_timeout=lock_timeout)
 
 
 def append_to_neardup_index(batch: DataFrame, path: str, *,
@@ -198,15 +170,6 @@ def append_to_neardup_index(batch: DataFrame, path: str, *,
             f"{expected_fingerprint!r} — another writer moved it, or "
             "the batch was already appended")
 
-    def _commit(meta: dict) -> dict:
-        n_docs = (spark.read.parquet(f"{path}/bands")
-                  .select("doc_id").distinct().count())
-        meta = dict(meta)
-        meta["n_docs"] = n_docs
-        meta["source_fingerprint"] = new_fingerprint
-        _write_meta(spark, path, meta)
-        return meta
-
     # partition-pruned probe of this run's own partition: free when
     # the partition is absent (the normal case), batch-sized when a
     # crashed attempt left it behind
@@ -226,7 +189,8 @@ def append_to_neardup_index(batch: DataFrame, path: str, *,
             # previous run crashed between the bands append and the
             # meta write — the batch is fully on disk; finish the
             # commit without re-appending
-            return _commit(meta)
+            return _recount_meta(spark, path, dict(
+                meta, source_fingerprint=new_fingerprint))
         raise RuntimeError(
             f"append_to_neardup_index at {path}: run_id={run_id} "
             f"partition already holds {n_existing} band rows that do "
@@ -237,7 +201,8 @@ def append_to_neardup_index(batch: DataFrame, path: str, *,
     (b.withColumn("run_id", F.lit(run_id))
         .write.mode("append").partitionBy("run_id")
         .parquet(f"{path}/bands"))
-    return _commit(meta)
+    return _recount_meta(spark, path,
+                         dict(meta, source_fingerprint=new_fingerprint))
 
 
 def candidate_pairs(batch: DataFrame, path: str, *,
@@ -364,14 +329,12 @@ def expire_neardup_run(spark: SparkSession, path: str, *,
         meta = load_meta(spark, path)
         part = f"{path}/bands/run_id={run_id}"
         shutil.rmtree(part)  # missing partition raises — loud by design
-        meta = dict(meta)
-        meta["source_fingerprint"] = new_fingerprint
-        return _recount_meta(spark, path, meta)
+        return _recount_meta(spark, path, dict(
+            meta, source_fingerprint=new_fingerprint))
 
 
 def _recount_meta(spark: SparkSession, path: str, meta: dict) -> dict:
-    meta = dict(meta)
-    meta["n_docs"] = (spark.read.parquet(f"{path}/bands")
-                      .select("doc_id").distinct().count())
-    _write_meta(spark, path, meta)
+    meta = dict(meta, n_docs=spark.read.parquet(f"{path}/bands")
+                .select("doc_id").distinct().count())
+    write_meta(path, meta)
     return meta

@@ -7,8 +7,10 @@ mode('overwrite') writes of a store's tables and corrupt the layout).
 ``mkdir`` is atomic on POSIX, works on any shared filesystem the
 warehouse lives on, and needs no daemon — the same primitive Spark's
 own FileStreamSink uses for its metadata log. The lock serializes
-BUILDS only; probes/reads never take it (they see either the old or
-the new fingerprint, both complete layouts)."""
+BUILDS only; probes/reads never take it. Meta commits are atomic
+(store_meta), but a rebuild rewrites ``codes``/``bands``/key tables
+in place before its meta commit, so a reader running beside a
+rebuild can see the old meta over a half-rewritten table."""
 
 from __future__ import annotations
 

@@ -32,11 +32,11 @@ from ..catalog import load_table
 from ..operators.ann_index import (
     append_to_index,
     build_if_stale,
-    load_meta,
     merge_indexes,
     train_quantizer,
     write_index,
 )
+from ..operators.store_meta import read_meta
 from ..registry import register
 
 #: batch selector — matches the incremental-funnel convention.
@@ -86,12 +86,8 @@ def q_llm_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_fp = "hist:" + _fp(sf_dir)
     full_fp = "full:" + _fp(sf_dir)
 
-    appended = False
-    try:
-        appended = load_meta(spark, path)["source_fingerprint"] == full_fp
-    except Exception:
-        pass
-    if not appended:
+    meta = read_meta(path)
+    if meta is None or meta["source_fingerprint"] != full_fp:
         _meta, _rebuilt = build_if_stale(
             history, path, source_fingerprint=hist_fp, seed=42)
         append_to_index(batch, path,
@@ -137,13 +133,8 @@ def q_llm_ann_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _paths(spark, sf_dir) + "_merge"
     full_fp = "merged:" + _fp(sf_dir)
 
-    done = False
-    try:
-        done = load_meta(spark, base + "/out")[
-            "source_fingerprint"] == full_fp
-    except Exception:
-        pass
-    if not done:
+    meta = read_meta(base + "/out")
+    if meta is None or meta["source_fingerprint"] != full_fp:
         q = train_quantizer(emb, seed=42)
         even = emb.filter(F.col("vec_id") % 2 == 0)
         odd = emb.filter(F.col("vec_id") % 2 == 1)

@@ -25,11 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.funnel_store import (
-    admit_batch,
-    init_store,
-    load_store_meta,
-)
+from ..operators.funnel_store import admit_batch, init_store
+from ..operators.store_meta import read_meta
 from ..registry import ORACLES, register, set_oracle
 from .wave147 import BATCH_MOD, MIN_TOKENS, TEST_MOD
 
@@ -60,19 +57,11 @@ def q_llm_funnel_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: admission cost is batch-sized (anti-joins on 32-byte keys,
     AQE broadcasts the batch side); the standing tables grow by the
     admitted keys only and prune by run_id partition."""
-    from pyspark.errors import AnalysisException
-
     path = _store_path(spark, sf_dir)
     fp = _fingerprint(sf_dir)
-    try:
-        fresh = load_store_meta(spark, path)["source_fingerprint"] == fp
-    except AnalysisException as exc:
-        if ("PATH_NOT_FOUND" not in str(exc)
-                and "Path does not exist" not in str(exc)):
-            raise
-        fresh = False
+    meta = read_meta(path)
     d = load_table(spark, sf_dir, "documents")
-    if not fresh:
+    if meta is None or meta["source_fingerprint"] != fp:
         init_store(
             d.filter(F.col("doc_id") % BATCH_MOD != 0),
             d.filter(F.col("doc_id") % TEST_MOD == 0),

@@ -40,8 +40,8 @@ from ..operators.neardup_index import (
     append_to_neardup_index,
     build_neardup_if_stale,
     candidate_pairs,
-    load_meta,
 )
+from ..operators.store_meta import read_meta
 from ..registry import register
 
 #: batch selector — the incremental-funnel convention.
@@ -242,16 +242,8 @@ def q_llm_neardup_index_append(spark: SparkSession,
     hist_fp = "hist:" + _fp(sf_dir)
     full_fp = "full:" + _fp(sf_dir)
 
-    from pyspark.errors import AnalysisException
-
-    appended = False
-    try:
-        appended = load_meta(spark, path)["source_fingerprint"] == full_fp
-    except AnalysisException as exc:  # ONLY missing path -> fresh build
-        if ("PATH_NOT_FOUND" not in str(exc)
-                and "Path does not exist" not in str(exc)):
-            raise
-    if not appended:
+    meta = read_meta(path)
+    if meta is None or meta["source_fingerprint"] != full_fp:
         build_neardup_if_stale(hist, path, source_fingerprint=hist_fp)
         append_to_neardup_index(batch, path, run_id=1,
                                 expected_fingerprint=hist_fp,
@@ -312,16 +304,8 @@ def q_llm_neardup_index_compact(spark: SparkSession,
     hist_fp = "cmp-hist:" + _fp(sf_dir)
     full_fp = "cmp-full:" + _fp(sf_dir)
 
-    from pyspark.errors import AnalysisException
-
-    appended = False
-    try:
-        appended = load_meta(spark, path)["source_fingerprint"] == full_fp
-    except AnalysisException as exc:  # ONLY missing path -> fresh build
-        if ("PATH_NOT_FOUND" not in str(exc)
-                and "Path does not exist" not in str(exc)):
-            raise
-    if not appended:
+    meta = read_meta(path)
+    if meta is None or meta["source_fingerprint"] != full_fp:
         build_neardup_if_stale(hist, path, source_fingerprint=hist_fp)
         append_to_neardup_index(batch, path, run_id=1,
                                 expected_fingerprint=hist_fp,

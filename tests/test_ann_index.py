@@ -267,8 +267,8 @@ def test_append_self_heals_interrupted_commit(spark, tmp_path):
     one batch ahead of meta while the fingerprint guard still passes.
     A retry must COMPLETE the commit (meta-only) instead of appending
     the batch a second time — and any other count divergence raises."""
-    from sparkit_learn_spark.operators.ann_index import (
-        _write_meta, append_to_index)
+    from sparkit_learn_spark.operators.ann_index import append_to_index
+    from sparkit_learn_spark.operators.store_meta import write_meta
 
     emb = load_table(spark, SF, "embeddings")
     hist = emb.filter(F.col("vec_id") % 3 != 0)
@@ -280,7 +280,7 @@ def test_append_self_heals_interrupted_commit(spark, tmp_path):
                     new_fingerprint="v-full")
     # simulate the crash: roll meta back to the pre-append state while
     # the appended codes stay on disk
-    _write_meta(spark, path, meta0)
+    write_meta(path, meta0)
     meta = append_to_index(batch, path, expected_fingerprint="v-hist",
                            new_fingerprint="v-full")
     assert meta["source_fingerprint"] == "v-full"
@@ -291,11 +291,55 @@ def test_append_self_heals_interrupted_commit(spark, tmp_path):
     # a divergence that is NOT explainable as this batch's interrupted
     # commit must raise loudly: roll meta back again but hand append a
     # DIFFERENT batch
-    _write_meta(spark, path, meta0)
+    write_meta(path, meta0)
     other = emb.filter(F.col("vec_id") % 3 == 1).limit(10)
     with pytest.raises(RuntimeError, match="inconsistent"):
         append_to_index(other, path, expected_fingerprint="v-hist",
                         new_fingerprint="v-other")
+
+
+def test_append_meta_commit_fault_keeps_old_meta(spark, tmp_path,
+                                                 monkeypatch):
+    """A crash INSIDE the meta commit (os.replace fails after the
+    codes append landed): the previous meta stays readable and
+    unchanged, and a retry completes through the interrupted-commit
+    branch — no re-encode, no second append of the batch."""
+    from sparkit_learn_spark.operators import ann_index, store_meta
+
+    emb = load_table(spark, SF, "embeddings")
+    hist = emb.filter(F.col("vec_id") % 3 != 0)
+    batch = emb.filter(F.col("vec_id") % 3 == 0)
+    path = str(tmp_path / "idx")
+    meta0 = write_index(hist, path, seed=42, source_fingerprint="v-hist")
+    real_replace = os.replace
+
+    def crash(src, dst):
+        if dst.endswith("_meta.json"):
+            raise OSError("injected crash in the meta commit")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(store_meta.os, "replace", crash)
+        with pytest.raises(OSError, match="injected"):
+            ann_index.append_to_index(batch, path,
+                                      expected_fingerprint="v-hist",
+                                      new_fingerprint="v-full")
+    assert load_meta(spark, path) == meta0
+    assert spark.read.parquet(f"{path}/codes").count() == emb.count()
+
+    def no_encode(*_a, **_k):
+        raise AssertionError("retry re-encoded the batch")
+
+    with monkeypatch.context() as m:
+        m.setattr(ann_index, "_encode_frame", no_encode)
+        meta = ann_index.append_to_index(batch, path,
+                                         expected_fingerprint="v-hist",
+                                         new_fingerprint="v-full")
+    assert meta["n_vectors"] == emb.count()
+    assert load_meta(spark, path) == meta
+    codes = spark.read.parquet(f"{path}/codes")
+    assert codes.count() == emb.count(), "batch must not be duplicated"
+    assert codes.select("id").distinct().count() == emb.count()
 
 
 def test_build_if_stale_lock_blocks_then_reuses(spark, tmp_path):

@@ -160,7 +160,7 @@ def test_append_self_heals_interrupted_commit(spark, tmp_path):
     COMPLETE the commit (meta-only) instead of appending the batch a
     second time — and a partition that does NOT match the batch
     raises loudly."""
-    from sparkit_learn_spark.operators.neardup_index import _write_meta
+    from sparkit_learn_spark.operators.store_meta import write_meta
 
     d = _docs(spark)
     hist = d.filter(F.col("doc_id") % BATCH_MOD != 0)
@@ -174,7 +174,7 @@ def test_append_self_heals_interrupted_commit(spark, tmp_path):
     n_full = spark.read.parquet(f"{path}/bands").count()
     # simulate the crash: roll meta back to the pre-append state while
     # the appended run_id=1 partition stays on disk
-    _write_meta(spark, path, meta0)
+    write_meta(path, meta0)
     meta = append_to_neardup_index(batch, path, run_id=1,
                                    expected_fingerprint="hist",
                                    new_fingerprint="full")
@@ -182,12 +182,53 @@ def test_append_self_heals_interrupted_commit(spark, tmp_path):
     bands = spark.read.parquet(f"{path}/bands")
     assert bands.count() == n_full, "batch must not be duplicated"
     # a run_id partition holding a DIFFERENT batch's rows must raise
-    _write_meta(spark, path, meta0)
+    write_meta(path, meta0)
     other = hist.limit(10)
     with pytest.raises(RuntimeError, match="do not match"):
         append_to_neardup_index(other, path, run_id=1,
                                 expected_fingerprint="hist",
                                 new_fingerprint="other")
+
+
+def test_append_meta_commit_fault_keeps_old_meta(spark, tmp_path,
+                                                 monkeypatch):
+    """A crash INSIDE the meta commit (os.replace fails after the
+    run_id=1 bands landed): the previous meta stays readable and
+    unchanged, and a retry completes through the interrupted-commit
+    branch without appending the batch's bands twice."""
+    import os
+
+    from sparkit_learn_spark.operators import store_meta
+
+    d = _docs(spark)
+    hist = d.filter(F.col("doc_id") % BATCH_MOD != 0)
+    batch = d.filter(F.col("doc_id") % BATCH_MOD == 0)
+    path = str(tmp_path / "idx")
+    meta0 = build_neardup_index(hist, path, source_fingerprint="hist")
+    real_replace = os.replace
+
+    def crash(src, dst):
+        if dst.endswith("_meta.json"):
+            raise OSError("injected crash in the meta commit")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(store_meta.os, "replace", crash)
+        with pytest.raises(OSError, match="injected"):
+            append_to_neardup_index(batch, path, run_id=1,
+                                    expected_fingerprint="hist",
+                                    new_fingerprint="full")
+    assert load_meta(spark, path) == meta0
+    n_full = spark.read.parquet(f"{path}/bands").count()
+    assert n_full > meta0["n_docs"] * 4, "the batch's bands landed"
+    meta = append_to_neardup_index(batch, path, run_id=1,
+                                   expected_fingerprint="hist",
+                                   new_fingerprint="full")
+    assert meta["source_fingerprint"] == "full"
+    assert load_meta(spark, path) == meta
+    assert spark.read.parquet(f"{path}/bands").count() == n_full, \
+        "batch must not be duplicated"
+    assert meta["n_docs"] * 4 == n_full
 
 
 def test_compact_preserves_candidates_and_bounds_runs(spark, tmp_path):
