@@ -19,8 +19,13 @@ replace (:mod:`store_meta`), the quantizer before meta.
 n_probe lists READS ONLY THOSE DIRECTORIES — partition pruning makes
 the scan cost track the probe schedule (√n_lists of the corpus), not
 the corpus. Centroids + codebooks are the only driver-side state
-(n_lists·d + m·n_codes·d/m doubles, corpus-size-independent), exactly
-the state :func:`similarity.ivf_pq_topk` broadcasts per run.
+(n_lists·d + m·n_codes·d/m doubles, corpus-size-independent).
+
+Training, routing, encoding, ADC scoring and the exact re-rank are the
+module-private kernels of :mod:`similarity` (``_train_pq``, ``_route``,
+``_pq_encode``, ``_adc_topk``, ``_exact_refine``) that
+:func:`similarity.ivf_pq_topk` runs in memory; this module adds only
+persistence and the partition-pruned scan.
 
 Staleness: ``meta.source_fingerprint`` records the corpus identity the
 caller supplies (size+mtime of the source parquet in the registered
@@ -45,64 +50,40 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .similarity import (
-    _collect_bounded_sample,
-    _lloyd,
+    _adc_topk,
+    _exact_refine,
+    _list_dist,
+    _mat,
+    _n_probe,
+    _pq_encode,
+    _route,
     _spread,
-    _topk_rows,
+    _train_pq,
+    _vec_frame,
     auto_ivf_params,
 )
 from .store_meta import commit, require_meta, reuse_or_build, write_meta
 
 
-def _train(vec: DataFrame, n_lists: int, m_subspaces: int, n_codes: int,
-           seed: int, n_total: int):
-    """Coarse centroids + per-subspace residual codebooks from the
-    bounded training sample (the ivf_pq_topk recipe)."""
-    n_train_cap = max(50 * n_lists, 4096)
-    train = vec
-    if n_total > n_train_cap:
-        train = vec.sample(fraction=min(1.0, n_train_cap / n_total),
-                           seed=seed)
-    X = _collect_bounded_sample(train)
-    d = X.shape[1]
-    if d % m_subspaces:
-        raise ValueError(f"dim {d} not divisible by m_subspaces={m_subspaces}")
-    ds = d // m_subspaces
-    C = _lloyd(X, n_lists, seed=seed)
-    lab = ((X ** 2).sum(1)[:, None] - 2.0 * (X @ C.T)
-           + (C ** 2).sum(1)[None, :]).argmin(1)
-    R = X - C[lab]
-    books = [_lloyd(R[:, s * ds:(s + 1) * ds], n_codes, seed=seed + 1 + s)
-             for s in range(m_subspaces)]
-    return C, books, d, ds
-
-
 def _encode_frame(vec: DataFrame, C: np.ndarray, books: list) -> DataFrame:
     """(id, list_id, codes) for every vector in ``vec`` against a
     FIXED quantizer — one Arrow pass, broadcast driver state only."""
-    ds = C.shape[1] // len(books)
     sc = vec.sparkSession.sparkContext
     b_C = sc.broadcast(C)
     b_books = sc.broadcast(books)
 
     def encode(batches):
         Cl = b_C.value
-        bks = b_books.value
         c2 = (Cl ** 2).sum(1)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.array([np.asarray(v, np.float64) for v in pdf["v"]])
-            lab = (-2.0 * (X @ Cl.T) + c2[None, :]).argmin(1)
-            R = X - Cl[lab]
-            codes = np.empty((len(X), len(bks)), dtype=np.int64)
-            for s, B in enumerate(bks):
-                sub = R[:, s * ds:(s + 1) * ds]
-                codes[:, s] = (-2.0 * (sub @ B.T)
-                               + (B ** 2).sum(1)[None, :]).argmin(1)
+            X = _mat(pdf["v"])
+            lab = _list_dist(X, Cl, c2).argmin(1)
             yield pd.DataFrame({"id": pdf["vid"].to_numpy(),
                                 "list_id": lab.astype("int32"),
-                                "codes": list(codes)})
+                                "codes": list(_pq_encode(X - Cl[lab],
+                                                         b_books.value))})
 
     return vec.mapInPandas(
         encode, schema="id long, list_id int, codes array<long>")
@@ -116,16 +97,11 @@ def train_quantizer(emb: DataFrame, *, n_lists: int | None = None,
     return (centroids, codebooks) for handing to shard builders
     (write_index's ``quantizer=``). One count job + one bounded
     collect; corpus-size-independent driver state."""
-    vec = _spread(emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ))
+    vec = _spread(_vec_frame(emb, id_col, vec_col))
     n_total = vec.count()
     if n_lists is None:
         n_lists, _ = auto_ivf_params(n_total)
-    C, books, _d, _ds = _train(vec, n_lists, m_subspaces, n_codes,
-                               seed, n_total)
-    return C, books
+    return _train_pq(vec, n_lists, m_subspaces, n_codes, seed, n_total)
 
 
 def write_index(emb: DataFrame, path: str, *, n_lists: int | None = None,
@@ -144,31 +120,27 @@ def write_index(emb: DataFrame, path: str, *, n_lists: int | None = None,
     the quantizer once on a global sample, hand it to every shard
     builder, then :func:`merge_indexes` the shard outputs (faiss's
     distributed-build recipe; at 100 TB the encode pass is the
-    parallel part and training is one bounded-sample job)."""
-    vec = _spread(emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ))
+    parallel part and training is one bounded-sample job).
+
+    Meta records the layout the quantizer HAS, read off (C, books) —
+    training on a sample smaller than ``n_lists`` or ``n_codes`` yields
+    fewer centroids or codewords than requested."""
+    vec = _spread(_vec_frame(emb, id_col, vec_col))
     n_total = vec.count()
-    if quantizer is not None:
-        C, books = quantizer
-        n_lists = len(C)
-        m_subspaces = len(books)
-        n_codes = len(books[0])
-        d = C.shape[1]
-    else:
+    if quantizer is None:
         if n_lists is None:
             n_lists, _ = auto_ivf_params(n_total)
-        C, books, d, _ds = _train(vec, n_lists, m_subspaces, n_codes,
-                                  seed, n_total)
+        quantizer = _train_pq(vec, n_lists, m_subspaces, n_codes, seed,
+                              n_total)
+    C, books = quantizer
     (_encode_frame(vec, C, books)
         .repartition("list_id")
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(f"{path}/codes"))
 
     _write_quantizer(path, C, books)
-    meta = {"n_lists": n_lists, "m_subspaces": m_subspaces,
-            "n_codes": n_codes, "d": d, "n_vectors": n_total,
+    meta = {"n_lists": len(C), "m_subspaces": len(books),
+            "n_codes": len(books[0]), "d": C.shape[1], "n_vectors": n_total,
             "seed": seed, "source_fingerprint": source_fingerprint}
     write_meta(path, meta)
     return meta
@@ -218,10 +190,7 @@ def append_to_index(emb_batch: DataFrame, path: str, *,
             f"{meta['source_fingerprint']!r} != expected "
             f"{expected_fingerprint!r} — another writer moved it, or "
             "the batch was already appended")
-    vec = _spread(emb_batch.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ))
+    vec = _spread(_vec_frame(emb_batch, id_col, vec_col))
     n_batch = vec.count()
     codes = spark.read.parquet(f"{path}/codes")
     n_actual = codes.count()  # parquet count — row-group metadata scan
@@ -341,9 +310,9 @@ def probe_index(spark: SparkSession, path: str, queries: DataFrame, *,
     state), routes each query to its ``n_probe`` nearest lists, scans
     ONLY those lists' code partitions (hive partition pruning on
     list_id), ADC-scores, and exactly re-ranks the top ``k*refine``
-    against ``corpus`` (the raw vector store) when given — the same
-    ADC + refine semantics as :func:`similarity.ivf_pq_topk`, minus
-    the training.
+    against ``corpus`` (the raw vector store) — through the same
+    ``_route`` / ``_adc_topk`` / ``_exact_refine`` kernels
+    :func:`similarity.ivf_pq_topk` runs, minus the training.
 
     ``expected_fingerprint`` guards against probing a stale index:
     pass the current corpus fingerprint and a mismatch raises instead
@@ -361,26 +330,19 @@ def probe_index(spark: SparkSession, path: str, queries: DataFrame, *,
             f"ann_index at {path} is stale: built from "
             f"{meta['source_fingerprint']!r}, corpus is now "
             f"{expected_fingerprint!r} — rebuild with build_if_stale")
-    m, ds = meta["m_subspaces"], meta["d"] // meta["m_subspaces"]
     if n_probe is None:
-        n_probe = max(4, min(meta["n_lists"],
-                             round(meta["n_lists"] ** 0.5)))
+        n_probe = _n_probe(meta["n_lists"])
 
-    C, books = read_quantizer(spark, path, m)
+    C, books = read_quantizer(spark, path, meta["m_subspaces"])
 
-    qv = queries.select(F.col(id_col).alias("qid"),
-                        F.col(vec_col).cast("array<double>").alias("qv"))
-    q_loc = qv.collect()  # the query panel is the small side by contract
+    qvec = _vec_frame(queries, id_col, vec_col)
+    q_loc = qvec.collect()  # the query panel is the small side by contract
     if len(q_loc) > 100_000:
         raise ValueError("probe_index: query panel exceeds 100k rows — "
                          "split the batch or use ivf_pq_topk")
-    Q = np.array([np.asarray(r["qv"], np.float64) for r in q_loc])
-    qids = np.array([r["qid"] for r in q_loc], dtype=np.int64)
-    d2 = -2.0 * (Q @ C.T) + (C ** 2).sum(1)[None, :]
-    n_pr = min(n_probe, len(C))
-    near = (np.argpartition(d2, n_pr - 1, axis=1)[:, :n_pr]
-            if n_pr < d2.shape[1]
-            else np.broadcast_to(np.arange(d2.shape[1]), d2.shape).copy())
+    Q = _mat(r["v"] for r in q_loc)
+    qids = np.array([r["vid"] for r in q_loc], dtype=np.int64)
+    near, _ = _route(Q, C, (C ** 2).sum(1), n_probe)
     probed_lists = sorted({int(x) for x in near.ravel()})
 
     # query routing table: (list_id, qid, qv) — tiny, broadcast side
@@ -399,50 +361,12 @@ def probe_index(spark: SparkSession, path: str, queries: DataFrame, *,
     n_cand = k * refine
 
     def adc(key, cdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"qid": pd.Series(dtype="int64"),
-                              "nid": pd.Series(dtype="int64")})
-        if len(cdf) == 0 or len(qdf) == 0:
-            return empty
-        Cl, bks = b_C.value, b_books.value
-        list_id = int(key[0])
-        codes_m = np.array([np.asarray(c, np.int64) for c in cdf["codes"]])
-        nids = cdf["id"].to_numpy()
-        order = np.argsort(nids)
-        nids, codes_m = nids[order], codes_m[order]
-        Qm = np.array([np.asarray(v, np.float64) for v in qdf["qv"]])
-        approx = np.tile((Qm @ Cl[list_id])[:, None], (1, len(nids)))
-        for s in range(len(bks)):
-            T = Qm[:, s * ds:(s + 1) * ds] @ bks[s].T
-            approx += T[:, codes_m[:, s]]
-        out_q, out_n = [], []
-        for qi, qid in enumerate(qdf["qid"].to_numpy()):
-            sims = approx[qi]
-            idx = np.nonzero(nids != qid)[0]
-            top = idx[np.argsort(-sims[idx], kind="stable")[:n_cand]]
-            out_q.extend([qid] * len(top))
-            out_n.extend(nids[top])
-        return pd.DataFrame({"qid": np.asarray(out_q, dtype=np.int64),
-                             "nid": np.asarray(out_n, dtype=np.int64)})
+        return _adc_topk(b_C.value[int(key[0])], b_books.value,
+                         cdf["id"].to_numpy(), cdf["codes"],
+                         qdf["qid"].to_numpy(), qdf["qv"], n_cand)
 
     cands = (codes.groupBy("list_id")
              .cogroup(routed_q.groupBy("list_id"))
              .applyInPandas(adc, schema="qid long, nid long")
              .distinct())  # a pair can surface from several lists
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _np_dot6(q: pd.Series, v: pd.Series) -> pd.Series:
-        if len(q) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        Qb = np.array([np.asarray(x, np.float64) for x in q])
-        Vb = np.array([np.asarray(x, np.float64) for x in v])
-        return pd.Series(np.round(np.einsum("ij,ij->i", Qb, Vb), 6))
-
-    store = corpus.select(F.col(id_col).alias("nid"),
-                          F.col(vec_col).cast("array<double>").alias("_nv"))
-    qstore = queries.select(F.col(id_col).alias("qid"),
-                            F.col(vec_col).cast("array<double>").alias("_qv"))
-    scored = (cands.join(qstore, "qid").join(store, "nid")
-              .select("qid", "nid", _np_dot6("_qv", "_nv").alias("sim")))
-    return _topk_rows(scored, k)
+    return _exact_refine(cands, qvec, _vec_frame(corpus, id_col, vec_col), k)

@@ -9,18 +9,34 @@ Arrow join — no driver collect, no full-table broadcast).
 paths; ``ivf_topk`` keeps only the n_lists×d centroid matrix on the
 driver — vectors stay distributed, co-partitioned by list id.
 
+Every scoring step of the exact, IVF and IVF-PQ paths — and of the
+persisted index in :mod:`ann_index` — is ONE module-private kernel
+below: ``_broadcast_topk`` / ``_block_topk`` / ``_excluded_topk``
+(exact and self-excluded top-k), ``_train_sample`` / ``_train_pq``
+(bounded quantizer training), ``_route`` / ``_list_dist`` (list
+routing), ``_pq_encode`` / ``_adc_topk`` (PQ codes and ADC scoring)
+and ``_exact_refine`` (the numpy re-rank).
+
 For unit vectors, euclidean² = 2 − 2·cos, so a euclidean radius r
 corresponds to cosine ≥ 1 − r²/2.
 """
 
 from __future__ import annotations
 
+import math
+import sys
+
+import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve via __globals__
+from pyspark import cloudpickle
 from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import dot
+# Worker-side closures call the module-level kernels below; pickle them
+# BY VALUE so executors never have to import this package (a caller may
+# run from any cwd — see session.ensure_pkg_on_workers).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 #: Above this many vectors the broadcast candidate matrix stops being
 #: safe (100k × 64 float64 ≈ 50 MB per executor) and cosine_topk
@@ -61,42 +77,61 @@ def _topk_rows(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
-                vec_col: str = "embedding",
-                max_broadcast_rows: int = DEFAULT_MAX_BROADCAST_ROWS,
-                n_shards: int | None = None) -> DataFrame:
-    """Exact top-k cosine neighbors per vector: (qid, nid, sim, rn).
+def _mat(vecs) -> np.ndarray:
+    """float64 row matrix from an iterable of vectors (an Arrow array
+    column or collected values)."""
+    return np.array([np.asarray(v, np.float64) for v in vecs])
 
-    Row-count guard: ≤ ``max_broadcast_rows`` vectors take the
-    broadcast fast path (one bounded collect of the candidate matrix,
-    one float64 BLAS matmul per Arrow batch — the reference's
-    blocked-matrix execution model [ref: splearn/rdd.py ArrayRDD.dot —
-    per-block X·A with a broadcast local matrix · C:M]); above it the
-    call FAILS OVER to :func:`cosine_topk_sharded`, which never
-    materializes the corpus anywhere.
 
-    Determinism: similarities are rounded to 6dp BEFORE ranking with
-    an id tiebreak, so ranking matches any double-precision oracle —
-    and both paths return bit-identical results.
-    """
-    import numpy as np
-    import pandas as pd
+def _pairs(q, n, s) -> pd.DataFrame:
+    """(qid, nid, sim) frame with the output schema's dtypes, also
+    when empty."""
+    return pd.DataFrame({"qid": np.asarray(q, dtype=np.int64),
+                         "nid": np.asarray(n, dtype=np.int64),
+                         "sim": np.asarray(s, dtype=np.float64)})
 
-    # bounded-scan guard: limit(n+1).count() stops reading after
-    # max_broadcast_rows+1 rows instead of scanning the full lineage
-    # (a full count() would double input reads on the common path)
-    if emb.limit(max_broadcast_rows + 1).count() > max_broadcast_rows:
-        return cosine_topk_sharded(emb, k=k, id_col=id_col, vec_col=vec_col,
-                                   n_shards=n_shards)
 
-    cand = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("vb")).collect()
-    nids = np.array([r["nid"] for r in cand], dtype=np.int64)
-    C = np.array([np.asarray(r["vb"], dtype=np.float64) for r in cand])
+def _excluded_topk(S, qids, nids, k: int) -> pd.DataFrame:
+    """Per row of the score block ``S`` (columns = id-sorted ``nids``):
+    the ``k`` best candidates other than the query itself. The sort is
+    stable over id-sorted candidates, so ties break by lower nid."""
+    out_q, out_n, out_s = [], [], []
+    for qi, qid in enumerate(qids):
+        sims = S[qi]
+        idx = np.nonzero(nids != qid)[0]
+        top = idx[np.argsort(-sims[idx], kind="stable")[:k]]
+        out_q.extend([qid] * len(top))
+        out_n.extend(nids[top])
+        out_s.extend(sims[top])
+    return _pairs(out_q, out_n, out_s)
+
+
+def _block_topk(qvecs, qids, cvecs, nids, k: int) -> pd.DataFrame:
+    """Exact self-excluded top-k of one (queries × candidates) block:
+    one BLAS matmul, 6dp rounding BEFORE ranking."""
+    if len(qids) == 0 or len(nids) == 0:
+        return _pairs([], [], [])
+    Q, M = _mat(qvecs), _mat(cvecs)
+    order = np.argsort(nids)  # id-sorted -> stable tiebreak
+    nids, M = nids[order], M[order]
+    return _excluded_topk(np.round(Q @ M.T, 6), qids, nids, k)
+
+
+def _broadcast_topk(q: DataFrame, cand: DataFrame, k: int, *,
+                    exclude_self: bool) -> DataFrame:
+    """Exact top-k of every (qid, vb) row of ``q`` against the
+    (nid, vb) candidates: (qid, nid, sim, rn). The candidates are
+    collected once — the caller bounds their count — and broadcast;
+    each Arrow batch is one float64 BLAS matmul per query chunk.
+    ``exclude_self`` drops the candidate whose id equals the query's
+    (the self-join shape)."""
+    cand_rows = cand.collect()
+    nids = np.array([r["nid"] for r in cand_rows], dtype=np.int64)
+    C = _mat(r["vb"] for r in cand_rows)
     order = np.argsort(nids)  # tiebreak needs id-sorted candidates
     nids, C = nids[order], C[order]
-    spark = emb.sparkSession
-    b_nids = spark.sparkContext.broadcast(nids)
-    b_C = spark.sparkContext.broadcast(C)
+    sc = q.sparkSession.sparkContext
+    b_nids, b_C = sc.broadcast(nids), sc.broadcast(C)
 
     # r12 (guide §4.2/§5): score in QUERY CHUNKS into one preallocated
     # buffer instead of materializing the whole batch's n-wide score
@@ -119,7 +154,7 @@ def cosine_topk(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Qb = np.array([np.asarray(v, dtype=np.float64) for v in pdf["vb"]])
+            Qb = _mat(pdf["vb"])
             qids_b = pdf["qid"].to_numpy()
             rows = []
             for lo in range(0, len(Qb), Q_CHUNK):
@@ -128,12 +163,14 @@ def cosine_topk(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
                 np.matmul(Q, cmT, out=S)
                 np.round(S, 6, out=S)
                 for qi, qid in enumerate(qids_b[lo:lo + Q_CHUNK]):
-                    sims = S[qi].copy()
-                    # self-exclusion: candidates are id-sorted, so the
-                    # query's own slot is findable in O(log n)
-                    self_pos = np.searchsorted(cn, qid)
-                    if self_pos < n and cn[self_pos] == qid:
-                        sims[self_pos] = -np.inf
+                    sims = S[qi]
+                    if exclude_self:
+                        # candidates are id-sorted, so the query's own
+                        # slot is findable in O(log n)
+                        sims = sims.copy()
+                        self_pos = np.searchsorted(cn, qid)
+                        if self_pos < n and cn[self_pos] == qid:
+                            sims[self_pos] = -np.inf
                     # top-k selection, branched on candidate count: the
                     # O(n) partition-select (everything >= the k-th
                     # value, then stable-sort the tiny boundary subset)
@@ -144,7 +181,8 @@ def cosine_topk(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
                     # candidates are id-sorted and the sort is stable,
                     # so ties break by lower nid either way.
                     if n <= k or n <= ARGSORT_CUTOVER:
-                        idx = np.nonzero(np.isfinite(sims))[0]
+                        idx = (np.nonzero(np.isfinite(sims))[0]
+                               if exclude_self else np.arange(n))
                     else:
                         kth = np.partition(sims, n - k)[n - k]
                         idx = np.nonzero(sims >= kth)[0]
@@ -153,9 +191,39 @@ def cosine_topk(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
                         rows.append((int(qid), int(cn[j]), float(sims[j]), rn))
             yield pd.DataFrame(rows, columns=["qid", "nid", "sim", "rn"])
 
+    return q.mapInPandas(topk_batches,
+                         schema="qid long, nid long, sim double, rn long")
+
+
+def cosine_topk(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
+                vec_col: str = "embedding",
+                max_broadcast_rows: int = DEFAULT_MAX_BROADCAST_ROWS,
+                n_shards: int | None = None) -> DataFrame:
+    """Exact top-k cosine neighbors per vector: (qid, nid, sim, rn).
+
+    Row-count guard: ≤ ``max_broadcast_rows`` vectors take the
+    broadcast fast path (one bounded collect of the candidate matrix,
+    one float64 BLAS matmul per Arrow batch — the reference's
+    blocked-matrix execution model [ref: splearn/rdd.py ArrayRDD.dot —
+    per-block X·A with a broadcast local matrix · C:M]); above it the
+    call FAILS OVER to :func:`cosine_topk_sharded`, which never
+    materializes the corpus anywhere.
+
+    Determinism: similarities are rounded to 6dp BEFORE ranking with
+    an id tiebreak, so ranking matches any double-precision oracle —
+    and both paths return bit-identical results.
+    """
+    # bounded-scan guard: limit(n+1).count() stops reading after
+    # max_broadcast_rows+1 rows instead of scanning the full lineage
+    # (a full count() would double input reads on the common path)
+    n = emb.limit(max_broadcast_rows + 1).count()
+    if n > max_broadcast_rows:
+        return cosine_topk_sharded(emb, k=k, id_col=id_col, vec_col=vec_col,
+                                   n_shards=n_shards)
+
     # r12 (VERDICT r11 #6): size the Python fan-out by ROWS, not by
-    # core count — the corpus size n is already known from the collect
-    # above. A blind spread to defaultParallelism put ~63 rows in each
+    # core count — the corpus size n is already known from the bounded
+    # count above. A blind spread to defaultParallelism put ~63 rows in each
     # of 32 mapInPandas tasks at sf0.1; each cold task pays a Python
     # worker fork + numpy/pandas import for one sub-ms matmul, which
     # is exactly the 32-core-slower-than-8-core inversion the r11
@@ -164,13 +232,12 @@ def cosine_topk(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
     # vectors (larger inputs failed over to the sharded path above), so
     # the repartition is unconditional — no df.rdd partition probe
     # (which forces a full plan analysis driver-side; VERDICT r11 #9).
-    n_parts = min(
-        emb.sparkSession.sparkContext.defaultParallelism,
-        max(2, -(-len(nids) // 256)),
-    )
+    n_parts = min(emb.sparkSession.sparkContext.defaultParallelism,
+                  max(2, -(-n // 256)))
     q = emb.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("vb")) \
         .repartition(n_parts)
-    return q.mapInPandas(topk_batches, schema="qid long, nid long, sim double, rn long")
+    cand = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("vb"))
+    return _broadcast_topk(q, cand, k, exclude_self=True)
 
 
 def cosine_topk_sharded(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
@@ -195,9 +262,6 @@ def cosine_topk_sharded(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
     Output is bit-identical to the broadcast path (same 6dp rounding
     before ranking, same nid tiebreak).
     """
-    import numpy as np
-    import pandas as pd
-
     if n_shards is None:
         # r11 (guide §2.2): scale-adaptive shard count. The fixed 16
         # built a 256-cell grid even for a 2k-vector corpus — 256
@@ -229,28 +293,8 @@ def cosine_topk_sharded(emb: DataFrame, *, k: int = 5, id_col: str = "vec_id",
     )
 
     def score_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"qid": pd.Series(dtype="int64"),
-                                 "nid": pd.Series(dtype="int64"),
-                                 "sim": pd.Series(dtype="float64")})
-        Q = np.array([np.asarray(v, dtype=np.float64) for v in left["vb"]])
-        C = np.array([np.asarray(v, dtype=np.float64) for v in right["vb"]])
-        nids = right["nid"].to_numpy()
-        order = np.argsort(nids)  # id-sorted -> stable tiebreak
-        nids, C = nids[order], C[order]
-        S = np.round(Q @ C.T, 6)
-        qids = left["qid"].to_numpy()
-        out_q, out_n, out_s = [], [], []
-        for qi, qid in enumerate(qids):
-            sims = S[qi]
-            idx = np.nonzero(nids != qid)[0]
-            top = idx[np.argsort(-sims[idx], kind="stable")[:k]]
-            out_q.extend([qid] * len(top))
-            out_n.extend(nids[top])
-            out_s.extend(sims[top])
-        return pd.DataFrame({"qid": np.asarray(out_q, dtype=np.int64),
-                             "nid": np.asarray(out_n, dtype=np.int64),
-                             "sim": np.asarray(out_s, dtype=np.float64)})
+        return _block_topk(left["vb"], left["qid"].to_numpy(),
+                           right["vb"], right["nid"].to_numpy(), k)
 
     scored = (
         queries.groupBy("q_shard", "c_shard")
@@ -298,8 +342,6 @@ def ann_lsh_neighbors(emb: DataFrame, *, radius: float = 1.0,
     degrades gracefully on viral buckets instead of blowing up the
     join. ``k`` bounds the OUTPUT to the k nearest per probe — the
     ≤ k·n contract IVF keeps."""
-    import numpy as np
-
     d = len(emb.select(vec_col).first()[0])
     rng = np.random.RandomState(seed)
     R = rng.standard_normal((num_hash_tables, d))
@@ -322,10 +364,6 @@ def ann_lsh_neighbors(emb: DataFrame, *, radius: float = 1.0,
         "vec_id", "v", F.explode(F.array(*tables)).alias("h")
     ).select("vec_id", "v", F.col("h.t").alias("t"),
              F.col("h.bucket").alias("bucket"))
-
-    from pyspark.sql import Window
-
-    import pandas as pd
 
     r2 = float(radius) * float(radius)
     chunk = 4096
@@ -391,7 +429,7 @@ def ann_lsh_neighbors(emb: DataFrame, *, radius: float = 1.0,
             vecs = np.concatenate(v_slices)
             order = np.argsort(ids, kind="stable")
             ids = ids[order]
-            X = np.array([np.asarray(x, np.float64) for x in vecs[order]])
+            X = _mat(vecs[order])
             yield from _score(ids, X)
 
         for pdf in batches:
@@ -452,11 +490,14 @@ def auto_ivf_params(n: int) -> tuple[int, int]:
     vectors (the quantizer's theoretical worst case, where no
     sublinear index can beat a corpus scan) are covered by the
     pinned-parameter recall test instead."""
-    import math
-
     n_lists = max(4, min(4096, round(math.sqrt(max(n, 1)))))
-    n_probe = max(4, min(n_lists, round(math.sqrt(n_lists))))
-    return n_lists, n_probe
+    return n_lists, _n_probe(n_lists)
+
+
+def _n_probe(n_lists: int) -> int:
+    """Default probe count for ``n_lists`` lists: ≈ √n_lists, floor 4
+    (see :func:`auto_ivf_params`)."""
+    return max(4, min(n_lists, round(math.sqrt(n_lists))))
 
 
 def ivf_list_balance(assign: DataFrame, list_col: str = "list_id") -> dict:
@@ -485,6 +526,29 @@ def ivf_list_balance(assign: DataFrame, list_col: str = "list_id") -> dict:
     }
 
 
+def _vec_frame(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vid, v) projection with v as array<double> at the source: a
+    lossless upcast for float inputs (a hardcoded float would silently
+    downcast double embeddings and could reorder the top-k), one cast
+    instead of per-stage numpy conversions downstream."""
+    return emb.select(F.col(id_col).alias("vid"),
+                      F.col(vec_col).cast("array<double>").alias("v"))
+
+
+def _ivf_input(emb: DataFrame, n_lists, n_probe, id_col: str, vec_col: str):
+    """(vec, n_total, n_lists, n_probe) for the in-memory IVF paths:
+    the spread (vid, v) vectors — _spread keeps the route matmul off a
+    1-2 partition parquet read — and ONE count per call. ``n_lists=None``
+    auto-sizes from that count (:func:`auto_ivf_params`)."""
+    n_total = emb.count() if n_lists is None else None
+    if n_lists is None:
+        n_lists, _ = auto_ivf_params(n_total)
+    vec = _spread(_vec_frame(emb, id_col, vec_col))
+    if n_total is None:  # explicit n_lists path — the one count this call pays
+        n_total = vec.count()
+    return vec, n_total, n_lists, _n_probe(n_lists) if n_probe is None else n_probe
+
+
 #: Quantizer train samples up to this many rows run Lloyd's iterations
 #: driver-side in one vectorized numpy pass — the faiss approach:
 #: coarse-quantizer training only ever sees a BOUNDED sample (50/list,
@@ -500,18 +564,14 @@ def _collect_bounded_sample(train: DataFrame):
     CONSTRUCTION: the limit() bakes DRIVER_TRAIN_CAP into the plan, so
     this collect can never exceed the cap no matter what the caller
     passed. O(cap·d) driver memory, independent of corpus size."""
-    import numpy as np
-
     rows = train.select("v").limit(DRIVER_TRAIN_CAP).collect()
-    return np.array([np.asarray(r["v"], dtype=np.float64) for r in rows])
+    return _mat(r["v"] for r in rows)
 
 
 def _lloyd(X, k: int, *, seed: int, iters: int = 10):
     """Vectorized numpy Lloyd's k-means over a LOCAL sample matrix:
     random init from the sample, empty clusters re-seeded. Returns
     min(k, len(X)) × d centroids."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     kk = min(k, len(X))
     C = X[rng.choice(len(X), size=kk, replace=False)].copy()
@@ -525,17 +585,27 @@ def _lloyd(X, k: int, *, seed: int, iters: int = 10):
     return C
 
 
-def _train_coarse_quantizer(train: DataFrame, n_lists: int, *,
-                            seed: int, n_train: int):
-    """n_lists×d centroid ndarray for the IVF coarse quantizer.
+def _train_sample(vec: DataFrame, n_lists: int, n_total: int, seed: int):
+    """(train, n_train): the quantizer's training slice of ``vec``.
+    Quantizer quality barely affects recall (n_probe does), and every
+    k-means iteration over the corpus is a full pass -> train on a
+    BOUNDED sample of max(50·n_lists, 4096) rows (faiss does the
+    same); assignment still covers every vector."""
+    cap = max(50 * n_lists, 4096)
+    if n_total > cap:
+        return vec.sample(fraction=min(1.0, cap / n_total), seed=seed), cap
+    return vec, n_total
 
-    ``train`` is the (already sample-capped) training slice with a
-    ``v`` array column. Small samples train driver-side (numpy
-    Lloyd's, 10 iterations — see _collect_bounded_sample/_lloyd);
-    larger ones fall back to distributed MLlib KMeans. Either way only
-    the centroid matrix reaches the caller."""
-    import numpy as np
 
+def _train_coarse_quantizer(vec: DataFrame, n_lists: int, *,
+                            seed: int, n_total: int):
+    """n_lists×d centroid ndarray for the IVF coarse quantizer, trained
+    on the bounded sample of the (vid, v) frame ``vec``. Small samples
+    train driver-side (numpy Lloyd's, 10 iterations — see
+    _collect_bounded_sample/_lloyd); larger ones fall back to
+    distributed MLlib KMeans. Either way only the centroid matrix
+    reaches the caller."""
+    train, n_train = _train_sample(vec, n_lists, n_total, seed)
     if n_train <= DRIVER_TRAIN_CAP:
         return _lloyd(_collect_bounded_sample(train), n_lists, seed=seed)
 
@@ -546,6 +616,105 @@ def _train_coarse_quantizer(train: DataFrame, n_lists: int, *,
     km = KMeans(k=n_lists, seed=seed, featuresCol="features",
                 initMode="random", maxIter=5).fit(feat)
     return np.array(km.clusterCenters())
+
+
+def _train_pq(vec: DataFrame, n_lists: int, m_subspaces: int, n_codes: int,
+              seed: int, n_total: int):
+    """(C, books): IVF-PQ quantizer from the bounded training sample —
+    coarse centroids (min(n_lists, sample)×d) and one codebook per
+    subspace of the coarse RESIDUAL (x − centroid(list(x))), each
+    min(n_codes, sample)×d/m (the faiss IVFPQ layout)."""
+    X = _collect_bounded_sample(_train_sample(vec, n_lists, n_total, seed)[0])
+    d = X.shape[1]
+    if d % m_subspaces:
+        raise ValueError(f"dim {d} not divisible by m_subspaces={m_subspaces}")
+    ds = d // m_subspaces
+    C = _lloyd(X, n_lists, seed=seed)
+    lab = ((X ** 2).sum(1)[:, None] - 2.0 * (X @ C.T)
+           + (C ** 2).sum(1)[None, :]).argmin(1)
+    R = X - C[lab]
+    books = [_lloyd(R[:, s * ds:(s + 1) * ds], n_codes, seed=seed + 1 + s)
+             for s in range(m_subspaces)]
+    return C, books
+
+
+def _list_dist(X, C, c2):
+    """Per row of ``X``, -2·x·c + |c|² against every list centroid —
+    the squared distance minus the per-row constant |x|²: one BLAS
+    matmul, no batch×lists×dim broadcast temp. ``c2`` = |C|², hoisted
+    by the caller (once per partition)."""
+    return -2.0 * (X @ C.T) + c2[None, :]
+
+
+def _route(X, C, c2, n_probe: int):
+    """(near, lab): the ``n_probe`` nearest lists of every row of ``X``
+    and, among them, its nearest — the assignment is always among the
+    probed lists."""
+    d2 = _list_dist(X, C, c2)
+    near = np.argpartition(d2, n_probe - 1, axis=1)[:, :n_probe] \
+        if n_probe < d2.shape[1] else \
+        np.broadcast_to(np.arange(d2.shape[1]), d2.shape).copy()
+    lab = np.take_along_axis(
+        near, np.take_along_axis(d2, near, 1).argmin(1, keepdims=True), 1
+    ).ravel()
+    return near, lab
+
+
+def _pq_encode(R, books) -> np.ndarray:
+    """m int64 codes per row of the residual matrix ``R``: the nearest
+    codeword of each subspace's codebook."""
+    ds = R.shape[1] // len(books)
+    codes = np.empty((len(R), len(books)), dtype=np.int64)
+    for s, B in enumerate(books):
+        codes[:, s] = (-2.0 * (R[:, s * ds:(s + 1) * ds] @ B.T)
+                       + (B ** 2).sum(1)[None, :]).argmin(1)
+    return codes
+
+
+def _adc_topk(c_list, books, nids, codes, qids, qvecs,
+              n_cand: int) -> pd.DataFrame:
+    """ADC (asymmetric distance computation) over ONE list: per query
+    and subspace one q·codebook lookup table, so every code row scores
+    ``q·c_list + Σ_m T_m[code_m]`` — table lookups, no vector math per
+    candidate. Returns each query's top ``n_cand`` (qid, nid), self
+    excluded."""
+    if len(qids) == 0 or len(nids) == 0:
+        return _pairs([], [], [])[["qid", "nid"]]
+    codes = np.array([np.asarray(c, np.int64) for c in codes])
+    order = np.argsort(nids)  # id-sorted -> stable tiebreak
+    nids, codes = nids[order], codes[order]
+    Q = _mat(qvecs)
+    ds = len(c_list) // len(books)
+    approx = np.tile((Q @ c_list)[:, None], (1, len(nids)))
+    for s, B in enumerate(books):
+        approx += (Q[:, s * ds:(s + 1) * ds] @ B.T)[:, codes[:, s]]
+    return _excluded_topk(approx, qids, nids, n_cand)[["qid", "nid"]]
+
+
+def _exact_refine(cands: DataFrame, qvec: DataFrame, nvec: DataFrame,
+                  k: int) -> DataFrame:
+    """EXACT re-rank of approximate (qid, nid) candidates: candidate-
+    sized joins back to the true vectors of the query side ``qvec`` and
+    the corpus side ``nvec`` (both (vid, v)), then the global top-k.
+
+    The dot+round is computed in numpy (np.round = half-to-even, the
+    SAME rounding as cosine_topk/ivf_topk's BLAS paths) — NOT JVM
+    F.round (HALF_UP over a sequential fold), which could diverge by
+    1e-6 on a .5-boundary sim and break the cross-path bit-equality
+    contract asserted in tests/test_ml.py."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def _np_dot6(q: pd.Series, v: pd.Series) -> pd.Series:
+        if len(q) == 0:
+            return pd.Series(np.empty(0, dtype=np.float64))
+        return pd.Series(np.round(np.einsum("ij,ij->i", _mat(q), _mat(v)), 6))
+
+    qside = qvec.select(F.col("vid").alias("qid"), F.col("v").alias("_qv"))
+    nside = nvec.select(F.col("vid").alias("nid"), F.col("v").alias("_nv"))
+    scored = (cands.join(qside, "qid").join(nside, "nid")
+              .select("qid", "nid", _np_dot6("_qv", "_nv").alias("sim")))
+    return _topk_rows(scored, k)
 
 
 def ivf_topk(emb: DataFrame, *, k: int = 5, n_lists: int | None = None,
@@ -573,40 +742,12 @@ def ivf_topk(emb: DataFrame, *, k: int = 5, n_lists: int | None = None,
     skew. Recall vs the exact baseline is asserted in tests/test_ml.py
     for both explicit and auto-sized parameters.
     """
-    import numpy as np
-    import pandas as pd
-
-    import math as _math
-
-    n_total: int | None = None  # counted at most ONCE per call
-    if n_lists is None:
-        n_total = emb.count()
-        n_lists, auto_probe = auto_ivf_params(n_total)
-        if n_probe is None:
-            n_probe = auto_probe
-    elif n_probe is None:
-        n_probe = max(4, min(n_lists, round(_math.sqrt(n_lists))))
-
-    # array<double> at the source: lossless upcast for float inputs,
-    # one cast instead of per-stage numpy conversions downstream;
-    # _spread keeps the route matmul off a 1-2 partition parquet read
-    vec = _spread(emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ))
-    # quantizer quality barely affects recall (n_probe does), and every
-    # k-means iteration over the corpus is a full pass -> train on a
-    # BOUNDED sample (faiss does the same); assignment below still
-    # covers every vector. Small samples run Lloyd's driver-side
-    # (numpy), big ones distributed MLlib — see _train_coarse_quantizer.
-    n_train_cap = max(50 * n_lists, 4096)
-    if n_total is None:  # explicit n_lists path — the one count this call pays
-        n_total = vec.count()
-    train = vec
-    if n_total > n_train_cap:
-        train = vec.sample(fraction=min(1.0, n_train_cap / n_total), seed=seed)
+    vec, n_total, n_lists, n_probe = _ivf_input(emb, n_lists, n_probe,
+                                                id_col, vec_col)
+    # small samples run Lloyd's driver-side (numpy), big ones
+    # distributed MLlib — see _train_coarse_quantizer
     centers = _train_coarse_quantizer(
-        train, n_lists, seed=seed, n_train=min(n_total, n_train_cap)
+        vec, n_lists, seed=seed, n_total=n_total
     )  # n_lists × d — the single piece of driver state
     b_centers = emb.sparkSession.sparkContext.broadcast(centers)
 
@@ -616,25 +757,13 @@ def ivf_topk(emb: DataFrame, *, k: int = 5, n_lists: int | None = None,
         its n_probe query-probe rows (role=1, the lists it searches).
         Fusing assignment and probing — they rank against the same
         broadcast centroid matrix — halves the Python scan stages and
-        feeds a single shuffle instead of a two-sided cogroup.
-        Vectors are emitted as array<double>: a lossless upcast for
-        any input element type (a hardcoded float would silently
-        downcast double embeddings and could reorder the top-k)."""
+        feeds a single shuffle instead of a two-sided cogroup."""
         C = b_centers.value
         c2 = (C ** 2).sum(1)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.array([np.asarray(v, np.float64) for v in pdf["v"]])
-            # rank by -2·x·c + |c|² — the |x|² term is constant per
-            # row; one BLAS matmul, no batch×lists×dim broadcast temp
-            d2 = -2.0 * (X @ C.T) + c2[None, :]
-            near = np.argpartition(d2, n_probe - 1, axis=1)[:, :n_probe] \
-                if n_probe < d2.shape[1] else \
-                np.broadcast_to(np.arange(d2.shape[1]), d2.shape).copy()
-            lab = np.take_along_axis(
-                near, np.take_along_axis(d2, near, 1).argmin(1, keepdims=True), 1
-            ).ravel()  # assignment = argmin — always among the probed lists
+            near, lab = _route(_mat(pdf["v"]), C, c2, n_probe)
             ids = pdf["vid"].to_numpy()
             vs = pdf["v"].to_numpy()
             yield pd.DataFrame({
@@ -652,28 +781,8 @@ def ivf_topk(emb: DataFrame, *, k: int = 5, n_lists: int | None = None,
     def score_list(pdf: pd.DataFrame) -> pd.DataFrame:
         corp = pdf[pdf["role"] == 0]
         qry = pdf[pdf["role"] == 1]
-        if len(corp) == 0 or len(qry) == 0:
-            return pd.DataFrame({"qid": pd.Series(dtype="int64"),
-                                 "nid": pd.Series(dtype="int64"),
-                                 "sim": pd.Series(dtype="float64")})
-        Q = np.array([np.asarray(v, np.float64) for v in qry["v"]])
-        M = np.array([np.asarray(v, np.float64) for v in corp["v"]])
-        nids = corp["id"].to_numpy()
-        order = np.argsort(nids)
-        nids, M = nids[order], M[order]
-        S = np.round(Q @ M.T, 6)
-        qids = qry["id"].to_numpy()
-        out_q, out_n, out_s = [], [], []
-        for qi, qid in enumerate(qids):
-            sims = S[qi]
-            idx = np.nonzero(nids != qid)[0]
-            top = idx[np.argsort(-sims[idx], kind="stable")[:k]]
-            out_q.extend([qid] * len(top))
-            out_n.extend(nids[top])
-            out_s.extend(sims[top])
-        return pd.DataFrame({"qid": np.asarray(out_q, dtype=np.int64),
-                             "nid": np.asarray(out_n, dtype=np.int64),
-                             "sim": np.asarray(out_s, dtype=np.float64)})
+        return _block_topk(qry["v"], qry["id"].to_numpy(),
+                           corp["v"], corp["id"].to_numpy(), k)
 
     scored = (
         routed.groupBy("list_id")
@@ -706,10 +815,11 @@ def ivf_pq_topk(emb: DataFrame, *, k: int = 5, n_lists: int | None = None,
 
     PQ scores are approximations, so the top ``k·refine`` candidates
     per query are RE-RANKED exactly: candidate (qid, nid) pairs join
-    the true vectors by id (candidate-sized, not corpus-sized) and the
-    exact JVM dot decides the final top-k with the same 6dp-round +
-    nid tiebreak as every other path. Recall ≥ 0.6 at auto sizing is
-    asserted on the clustered calibration fixture (tests/test_ml.py).
+    the true vectors by id (candidate-sized, not corpus-sized) and a
+    numpy float64 dot (``_exact_refine``) decides the final top-k with
+    the same 6dp-round + nid tiebreak as every other path. Recall ≥
+    0.6 at auto sizing is asserted on the clustered calibration
+    fixture (tests/test_ml.py).
 
     Driver state: coarse centroids (n_lists×d) + codebooks
     (m × n_codes × d/m ≈ n_codes·d) — both corpus-size-independent;
@@ -718,43 +828,9 @@ def ivf_pq_topk(emb: DataFrame, *, k: int = 5, n_lists: int | None = None,
     their vector (queries are the small side by construction);
     candidates 2× for the exact refine join.
     """
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    if n_lists is None:
-        n_total = emb.count()
-        n_lists, auto_probe = auto_ivf_params(n_total)
-        if n_probe is None:
-            n_probe = auto_probe
-    else:
-        n_total = None
-        if n_probe is None:
-            n_probe = max(4, min(n_lists, round(math.sqrt(n_lists))))
-
-    vec = _spread(emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ))
-    n_train_cap = max(50 * n_lists, 4096)
-    if n_total is None:
-        n_total = vec.count()
-    train = vec
-    if n_total > n_train_cap:
-        train = vec.sample(fraction=min(1.0, n_train_cap / n_total), seed=seed)
-    X = _collect_bounded_sample(train)
-    d = X.shape[1]
-    if d % m_subspaces:
-        raise ValueError(f"dim {d} not divisible by m_subspaces={m_subspaces}")
-    ds = d // m_subspaces
-
-    C = _lloyd(X, n_lists, seed=seed)                       # coarse centroids
-    lab = ((X ** 2).sum(1)[:, None] - 2.0 * (X @ C.T)
-           + (C ** 2).sum(1)[None, :]).argmin(1)
-    R = X - C[lab]                                          # residuals
-    books = [_lloyd(R[:, s * ds:(s + 1) * ds], n_codes, seed=seed + 1 + s)
-             for s in range(m_subspaces)]
+    vec, n_total, n_lists, n_probe = _ivf_input(emb, n_lists, n_probe,
+                                                id_col, vec_col)
+    C, books = _train_pq(vec, n_lists, m_subspaces, n_codes, seed, n_total)
     sc = emb.sparkSession.sparkContext
     b_C = sc.broadcast(C)
     b_books = sc.broadcast(books)
@@ -767,25 +843,12 @@ def ivf_pq_topk(emb: DataFrame, *, k: int = 5, n_lists: int | None = None,
         Cl = b_C.value
         bks = b_books.value
         c2 = (Cl ** 2).sum(1)
-        n_pr = min(n_probe, len(Cl))
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Xb = np.array([np.asarray(v, np.float64) for v in pdf["v"]])
-            d2 = -2.0 * (Xb @ Cl.T) + c2[None, :]
-            near = np.argpartition(d2, n_pr - 1, axis=1)[:, :n_pr] \
-                if n_pr < d2.shape[1] else \
-                np.broadcast_to(np.arange(d2.shape[1]), d2.shape).copy()
-            labb = np.take_along_axis(
-                near, np.take_along_axis(d2, near, 1).argmin(1, keepdims=True), 1
-            ).ravel()
-            Rb = Xb - Cl[labb]
-            codes = np.empty((len(Xb), m_subspaces), dtype=np.int64)
-            for s in range(m_subspaces):
-                B = bks[s]
-                sub = Rb[:, s * ds:(s + 1) * ds]
-                codes[:, s] = (-2.0 * (sub @ B.T)
-                               + (B ** 2).sum(1)[None, :]).argmin(1)
+            Xb = _mat(pdf["v"])
+            near, labb = _route(Xb, Cl, c2, n_probe)
+            codes = _pq_encode(Xb - Cl[labb], bks)
             ids = pdf["vid"].to_numpy()
             vs = pdf["v"].to_numpy()
             corp = pd.DataFrame({
@@ -814,63 +877,15 @@ def ivf_pq_topk(emb: DataFrame, *, k: int = 5, n_lists: int | None = None,
     def adc_list(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         corp = pdf[pdf["role"] == 0]
         qry = pdf[pdf["role"] == 1]
-        empty = pd.DataFrame({"qid": pd.Series(dtype="int64"),
-                              "nid": pd.Series(dtype="int64")})
-        if len(corp) == 0 or len(qry) == 0:
-            return empty
-        Cl = b_C.value
-        bks = b_books.value
-        list_id = int(key[0])
-        codes = np.array([np.asarray(c, np.int64) for c in corp["codes"]])
-        nids = corp["id"].to_numpy()
-        order = np.argsort(nids)           # id-sorted -> stable tiebreak
-        nids, codes = nids[order], codes[order]
-        Q = np.array([np.asarray(v, np.float64) for v in qry["qv"]])
-        base = Q @ Cl[list_id]             # q·c_list, one per query
-        # ADC tables: T[s] is nq × n_codes; corpus score = base + Σ lookups
-        approx = np.tile(base[:, None], (1, len(nids)))
-        for s in range(m_subspaces):
-            T = Q[:, s * ds:(s + 1) * ds] @ bks[s].T
-            approx += T[:, codes[:, s]]
-        qids = qry["id"].to_numpy()
-        out_q, out_n = [], []
-        for qi, qid in enumerate(qids):
-            sims = approx[qi]
-            idx = np.nonzero(nids != qid)[0]
-            top = idx[np.argsort(-sims[idx], kind="stable")[:n_cand]]
-            out_q.extend([qid] * len(top))
-            out_n.extend(nids[top])
-        return pd.DataFrame({"qid": np.asarray(out_q, dtype=np.int64),
-                             "nid": np.asarray(out_n, dtype=np.int64)})
+        return _adc_topk(b_C.value[int(key[0])], b_books.value,
+                         corp["id"].to_numpy(), corp["codes"],
+                         qry["id"].to_numpy(), qry["qv"], n_cand)
 
     cands = (
         routed.groupBy("list_id")
         .applyInPandas(adc_list, schema="qid long, nid long")
     )
-
-    # EXACT refine: candidate-sized joins back to the true vectors.
-    # The dot+round is computed in numpy (np.round = half-to-even, the
-    # SAME rounding as cosine_topk/ivf_topk's BLAS paths) — NOT JVM
-    # F.round (HALF_UP over a sequential fold), which could diverge by
-    # 1e-6 on a .5-boundary sim and break the cross-path bit-equality
-    # contract asserted in tests/test_ml.py.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _np_dot6(q: pd.Series, v: pd.Series) -> pd.Series:
-        if len(q) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        Q = np.array([np.asarray(x, np.float64) for x in q])
-        V = np.array([np.asarray(x, np.float64) for x in v])
-        return pd.Series(np.round(np.einsum("ij,ij->i", Q, V), 6))
-
-    qside = vec.select(F.col("vid").alias("qid"), F.col("v").alias("_qvec"))
-    nside = vec.select(F.col("vid").alias("nid"), F.col("v").alias("_nvec"))
-    scored = (
-        cands.join(qside, "qid").join(nside, "nid")
-        .select("qid", "nid", _np_dot6("_qvec", "_nvec").alias("sim"))
-    )
-    return _topk_rows(scored, k)
+    return _exact_refine(cands, vec, vec, k)
 
 
 def mmr_rerank(emb: DataFrame, *, k: int = 5, fetch: int = 20,
@@ -907,9 +922,6 @@ def mmr_rerank_candidates(cand: DataFrame, emb: DataFrame, *,
     exact top-k feeds it below ~10⁶ vectors, the persisted IVF-PQ
     probe feeds it at corpus scale. Same determinism contract
     (6dp sims in, 9dp-rounded argmax, nid tiebreak)."""
-    import numpy as np
-    import pandas as pd
-
     vecs = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
     joined = cand.select("qid", "nid", "sim").join(vecs, "nid")
     # r11 (guide §4.1): pack each query's ≤fetch candidates into ONE
@@ -935,8 +947,7 @@ def mmr_rerank_candidates(cand: DataFrame, emb: DataFrame, *,
                 # sort_values(["sim","nid"], ascending=[False,True])
                 order = np.lexsort((nids, -sims))
                 nids, sims = nids[order], sims[order]
-                C = np.array([np.asarray(cands[i]["nv"], np.float64)
-                              for i in order])
+                C = _mat(cands[i]["nv"] for i in order)
                 qid = int(qid)
                 n = len(nids)
                 pen = np.zeros(n)
@@ -977,61 +988,14 @@ def cosine_retrieve(queries: DataFrame, corpus: DataFrame, *, k: int = 5,
     Scale: the corpus broadcasts (bounded; raise past
     ``max_broadcast_rows`` — use IVF routing for bigger corpora); the
     query stream never shuffles."""
-    import numpy as np
-    import pandas as pd
-
     if corpus.limit(max_broadcast_rows + 1).count() > max_broadcast_rows:
         raise ValueError(
             f"corpus exceeds {max_broadcast_rows} rows — use ivf_topk-style "
             "routing for broadcast-infeasible corpora")
-    cand = corpus.select(F.col(id_col).alias("nid"),
-                         F.col(vec_col).alias("vb")).collect()
-    nids = np.array([r["nid"] for r in cand], dtype=np.int64)
-    C = np.array([np.asarray(r["vb"], dtype=np.float64) for r in cand])
-    order = np.argsort(nids)
-    nids, C = nids[order], C[order]
-    spark = queries.sparkSession
-    b_nids = spark.sparkContext.broadcast(nids)
-    b_C = spark.sparkContext.broadcast(C)
-
-    # r12: query-chunked scoring into one reused buffer — same
-    # allocation-churn fix as cosine_topk above (this host serializes
-    # concurrent large mmap/munmap; see the measured 73 s -> 9.7 s
-    # paired GEMM A/B there). Dots, rounding, selection unchanged.
-    Q_CHUNK = 128
-
-    def topk_batches(batches):
-        cn, cm = b_nids.value, b_C.value
-        cmT = np.ascontiguousarray(cm.T)
-        n = len(cn)
-        s_buf = np.empty((Q_CHUNK, n))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Qb = np.array([np.asarray(v, dtype=np.float64) for v in pdf["vb"]])
-            qids_b = pdf["qid"].to_numpy()
-            rows = []
-            for lo in range(0, len(Qb), Q_CHUNK):
-                Q = Qb[lo:lo + Q_CHUNK]
-                S = s_buf[:len(Q)]
-                np.matmul(Q, cmT, out=S)
-                np.round(S, 6, out=S)
-                for qi, qid in enumerate(qids_b[lo:lo + Q_CHUNK]):
-                    sims = S[qi]
-                    if n <= k or n <= ARGSORT_CUTOVER:
-                        idx = np.arange(n)
-                    else:
-                        kth = np.partition(sims, n - k)[n - k]
-                        idx = np.nonzero(sims >= kth)[0]
-                    top = idx[np.argsort(-sims[idx], kind="stable")[:k]]
-                    for rn, j in enumerate(top, start=1):
-                        rows.append((int(qid), int(cn[j]), float(sims[j]), rn))
-            yield pd.DataFrame(rows, columns=["qid", "nid", "sim", "rn"])
-
     q = _spread(queries.select(F.col(id_col).alias("qid"),
                                F.col(vec_col).alias("vb")))
-    return q.mapInPandas(topk_batches,
-                         schema="qid long, nid long, sim double, rn long")
+    cand = corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("vb"))
+    return _broadcast_topk(q, cand, k, exclude_self=False)
 
 
 def panel_all_sims(corpus: DataFrame, panel: DataFrame, *,
@@ -1055,9 +1019,6 @@ def panel_all_sims(corpus: DataFrame, panel: DataFrame, *,
 
     Emits (qid, cid, sim, *payload_cols copied from the corpus row);
     per-query panel attributes join back JVM-side on the qid key."""
-    import numpy as np
-    import pandas as pd
-
     payload_cols = payload_cols or []
     prow = panel.select(panel_id, panel_vec).limit(max_panel_rows + 1).collect()
     if len(prow) > max_panel_rows:
@@ -1065,7 +1026,7 @@ def panel_all_sims(corpus: DataFrame, panel: DataFrame, *,
             f"panel exceeds {max_panel_rows} rows — this operator is for "
             "fixed eval panels; shard the panel or use cosine_retrieve")
     qids = np.array([r[panel_id] for r in prow], dtype=np.int64)
-    Q = np.array([np.asarray(r[panel_vec], dtype=np.float64) for r in prow])
+    Q = _mat(r[panel_vec] for r in prow)
     spark = corpus.sparkSession
     b_qids = spark.sparkContext.broadcast(qids)
     b_Q = spark.sparkContext.broadcast(Q)
@@ -1086,7 +1047,7 @@ def panel_all_sims(corpus: DataFrame, panel: DataFrame, *,
             nb = len(pdf)
             if nb == 0:
                 continue
-            C = np.array([np.asarray(v, dtype=np.float64) for v in pdf["vb"]])
+            C = _mat(pdf["vb"])
             S = np.round(qm @ C.T, 6)          # (nq, nb)
             out_qid = np.repeat(qn, nb)
             out_cid = np.tile(pdf["cid"].to_numpy(), nq)
@@ -1130,23 +1091,12 @@ def semdedup(emb: DataFrame, *, n_clusters: int | None = None,
     deliberately missed (the paper's trade: recall tracks quantizer
     quality); the LSH path is the recall-first alternative.
     """
-    import numpy as np
-    import pandas as pd
-
-    vec = _spread(emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ))
+    vec = _spread(_vec_frame(emb, id_col, vec_col))
     n_total = vec.count()
     if n_clusters is None:
         n_clusters, _ = auto_ivf_params(n_total)
-    n_train_cap = max(50 * n_clusters, 4096)
-    train = vec
-    if n_total > n_train_cap:
-        train = vec.sample(fraction=min(1.0, n_train_cap / n_total), seed=seed)
-    centers = _train_coarse_quantizer(
-        train, n_clusters, seed=seed, n_train=min(n_total, n_train_cap)
-    )
+    centers = _train_coarse_quantizer(vec, n_clusters, seed=seed,
+                                      n_total=n_total)
     b_centers = emb.sparkSession.sparkContext.broadcast(centers)
 
     def assign(batches):
@@ -1155,8 +1105,7 @@ def semdedup(emb: DataFrame, *, n_clusters: int | None = None,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.array([np.asarray(x, np.float64) for x in pdf["v"]])
-            lab = (-2.0 * (X @ C.T) + c2[None, :]).argmin(1)
+            lab = _list_dist(_mat(pdf["v"]), C, c2).argmin(1)
             yield pd.DataFrame({
                 "cluster": lab.astype("int32"),
                 "vid": pdf["vid"].to_numpy(),
@@ -1172,7 +1121,7 @@ def semdedup(emb: DataFrame, *, n_clusters: int | None = None,
         # union-find representative is the group minimum
         pdf = pdf.sort_values("vid").reset_index(drop=True)
         ids = pdf["vid"].to_numpy()
-        X = np.array([np.asarray(x, np.float64) for x in pdf["v"]])
+        X = _mat(pdf["v"])
         # normalize so the threshold is TRUE cosine even for
         # non-unit-norm inputs (ADVICE r7: the raw dot equalled cosine
         # only under the fixture's unit-vector convention)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -373,3 +374,44 @@ def test_build_if_stale_lock_blocks_then_reuses(spark, tmp_path):
         build_if_stale(emb, str(tmp_path / "idx2"),
                        source_fingerprint="fp-y", lock_timeout=0.0)
     os.rmdir(lock2)
+
+
+def test_meta_records_trained_layout(spark, tmp_path):
+    """Meta must describe the quantizer on disk, not the request:
+    Lloyd's returns min(k, sample) centroids, so 120 vectors train 120
+    lists (not the requested 200) and 120 codewords (not 256)."""
+    from sparkit_learn_spark.operators.ann_index import read_quantizer
+
+    emb = load_table(spark, SF, "embeddings").filter("vec_id < 120")
+    path = str(tmp_path / "idx")
+    meta = write_index(emb, path, n_lists=200, seed=42,
+                       source_fingerprint="small")
+    C, books = read_quantizer(spark, path, meta["m_subspaces"])
+    assert (meta["n_lists"], meta["n_codes"]) == (120, 120)
+    assert meta["n_lists"] == len(C)
+    assert meta["m_subspaces"] == len(books)
+    assert meta["n_codes"] == len(books[0])
+    assert meta["d"] == C.shape[1]
+    assert load_meta(spark, path) == meta
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_fresh_and_persisted_ivf_pq_agree(spark, tmp_path, sf):
+    """ivf_pq_topk and write_index + probe_index are one algorithm:
+    same bounded training sample, routing, codes, ADC and exact
+    re-rank, so on the same parameters they return the same rows."""
+    from sparkit_learn_spark.operators.similarity import ivf_pq_topk
+
+    emb = load_table(spark, os.path.join(os.path.dirname(SF), sf),
+                     "embeddings")
+    key = ["qid", "rn"]
+    fresh = (ivf_pq_topk(emb, k=5, n_lists=8, n_probe=3, n_codes=16)
+             .filter(F.col("qid") % 5 == 0)
+             .toPandas().sort_values(key).reset_index(drop=True))
+    path = str(tmp_path / "idx")
+    write_index(emb, path, n_lists=8, n_codes=16, source_fingerprint=sf)
+    persisted = (probe_index(spark, path, emb.filter("vec_id % 5 = 0"),
+                             k=5, n_probe=3, corpus=emb)
+                 .toPandas().sort_values(key).reset_index(drop=True))
+    assert len(fresh) == 5 * emb.filter("vec_id % 5 = 0").count()
+    pd.testing.assert_frame_equal(fresh, persisted)

@@ -440,6 +440,59 @@ def test_ivf_topk_is_collect_free(spark, sf_dir):
     assert src_sample.count(".collect()") == 1
     for fn in (similarity._train_coarse_quantizer, similarity.ivf_pq_topk):
         assert ".collect()" not in inspect.getsource(fn)
+    # the shared training, routing, encode, ADC and refine kernels that
+    # ivf_topk, ivf_pq_topk and the persisted index all run stay
+    # collect-free too
+    from sparkit_learn_spark.operators import ann_index
+
+    for fn in (similarity._train_sample, similarity._train_pq,
+               similarity._ivf_input, similarity._vec_frame,
+               similarity._list_dist, similarity._route,
+               similarity._pq_encode, similarity._adc_topk,
+               similarity._excluded_topk, similarity._block_topk,
+               similarity._exact_refine, ann_index._encode_frame,
+               ann_index.train_quantizer, ann_index.write_index,
+               ann_index.append_to_index):
+        assert ".collect()" not in inspect.getsource(fn), fn.__name__
+    # across both modules the only driver collects are the bounded
+    # training sample, the size-guarded broadcast top-k, probe_index's
+    # ≤100k query panel and panel_all_sims' bounded eval panel
+    collectors = {
+        f"{mod.__name__.rsplit('.', 1)[1]}.{name}"
+        for mod in (similarity, ann_index)
+        for name, fn in inspect.getmembers(mod, inspect.isfunction)
+        if fn.__module__ == mod.__name__
+        and ".collect()" in inspect.getsource(fn)
+    }
+    assert collectors == {"similarity._collect_bounded_sample",
+                          "similarity._broadcast_topk",
+                          "similarity.panel_all_sims",
+                          "ann_index.probe_index"}, collectors
+    assert "100_000" in inspect.getsource(ann_index.probe_index)
+
+
+def test_similarity_kernels_unpickle_without_the_package(tmp_path):
+    """Worker closures call similarity's module-level kernels, so the
+    kernels must pickle BY VALUE: an executor that cannot import this
+    package (a driver started from another cwd) still runs them."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from sparkit_learn_spark.operators import similarity
+
+    code = ("import pickle, sys; import numpy as np; "
+            "f = pickle.loads(sys.stdin.buffer.read()); "
+            "ids = np.array([0, 1]); "
+            "print(len(f(np.eye(2), ids, np.eye(2), ids, 1)))")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", code],
+                         input=cloudpickle.dumps(similarity._block_topk),
+                         cwd=tmp_path, env=env, capture_output=True)
+    assert out.returncode == 0, out.stderr.decode()[-500:]
+    assert out.stdout.strip() == b"2"
 
 
 def test_approx_quantiles_error_bound(spark, sf_dir, duck):

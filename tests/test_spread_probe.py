@@ -44,3 +44,31 @@ def test_non_file_frame_falls_back(spark):
     # the estimate falls back to the exact probe
     df = spark.range(10)
     assert _scan_partitions(df) >= 1
+
+
+def test_estimate_matches_real_probe_on_spread_inputs(spark, sf_dir):
+    """The frames ``similarity._spread`` actually receives — not only
+    base tables — must get the same spread decision from the estimate
+    as from the exact probe: the projected+cast (vid, v) frame of the
+    IVF/ANN paths, a filtered ingest batch as append_to_index sees it,
+    and cosine_retrieve's query frame."""
+    from pyspark.sql import functions as F
+
+    from sparkit_learn_spark.operators.similarity import _vec_frame
+
+    p = spark.sparkContext.defaultParallelism
+    emb = load_table(spark, sf_dir, "embeddings")
+    frames = {
+        "vec_frame": _vec_frame(emb, "vec_id", "embedding"),
+        "ingest_batch": _vec_frame(emb.filter("vec_id % 7 = 0"),
+                                   "vec_id", "embedding"),
+        "retrieve_queries": emb.filter(F.col("vec_id") % 20 == 0).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("vb")),
+    }
+    for name, df in frames.items():
+        est = _scan_partitions(df)
+        real = df.rdd.getNumPartitions()
+        assert (est < p) == (real < p), (
+            f"{name}: estimate {est} vs real {real} flip the spread "
+            f"decision at parallelism {p}"
+        )
