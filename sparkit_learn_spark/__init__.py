@@ -13,15 +13,10 @@ Design rules (SURVEY.md §4):
   * No unbounded collect() to the driver; broadcast only under
     threshold; aggregation stays distributed.
 
-Caller contract for cached state (r12, after ADVICE r11): some query
-functions persist() bounded intermediates or localCheckpoint()
-iterative state for the duration of the returned plan's consumers —
-deliberately WITHOUT a matching unpersist, because the frame is still
-lazily referenced by the returned DataFrame. A long-lived session that
-invokes query functions repeatedly should release that state between
-invocations (``spark.catalog.clearCache()`` plus a blocking
-``rdd.unpersist(True)`` over ``getPersistentRDDs()``), exactly as
-``bench.py:_release_query_state`` and ``tools/profile_query.py`` do.
+Cached state: some query functions persist() or localCheckpoint()
+intermediates that the returned frame still references. A session
+that runs query after query releases them with
+``session.release_query_state`` once each query's consumers have run.
 """
 
 __version__ = "0.1.0"

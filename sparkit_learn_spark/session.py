@@ -99,6 +99,29 @@ def get_session(app_name: str = "sparkit-learn-spark",
     return builder.getOrCreate()
 
 
+def release_query_state(spark: SparkSession) -> None:
+    """Drop the state query functions leave cached in ``spark``.
+
+    Some query functions persist() bounded intermediates or
+    localCheckpoint() iterative state for the returned plan's
+    consumers, with no matching unpersist: the returned frame still
+    references it lazily. A session that runs query after query keeps
+    all of it in one JVM, and each new plan's cache lookup scans every
+    entry (r11: untouched sub-second queries ran 3-8x slower late in a
+    142-query bench). Call this once a query's consumers have run.
+
+    Clears the CacheManager, then unpersists every persistent RDD
+    BLOCKING: the default async removal overlaps whatever runs next.
+    Never call it while a frame that outlives the call is backed by a
+    localCheckpoint, e.g. under a module-scoped test fixture holding a
+    checkpointed frame: truncated lineage cannot be recomputed once
+    its blocks are gone.
+    """
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
+
+
 def ensure_runtime_confs(spark: SparkSession) -> None:
     """Defensively apply runtime confs to a session we didn't create."""
     for k, v in RUNTIME_CONFS.items():

@@ -37,23 +37,3 @@ def duck(sf_dir):
     yield con
     con.close()
 
-
-def release_query_state(spark) -> None:
-    """Per-test cache release for the registry-sweep suites (r12).
-
-    Query functions legitimately persist()/localCheckpoint() bounded
-    intermediates; a suite that constructs hundreds of queries in one
-    JVM accumulates every entry in CacheManager, and each NEW plan
-    construction then scans all prior entries during cache lookup —
-    driver-side work that grows with test index. Mirror bench.py's
-    between-query release (clearCache + blocking unpersist, no forced
-    GC). Only for modules where no frame is shared across tests — a
-    module-scoped fixture holding a localCheckpointed frame must NOT
-    release (unpersisting truncated lineage is unrecoverable).
-    """
-    try:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(True)
-    except Exception:
-        pass

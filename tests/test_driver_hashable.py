@@ -24,6 +24,7 @@ import pytest
 from pyspark.sql import types as T
 
 from sparkit_learn_spark.registry import all_oracles, all_queries
+from sparkit_learn_spark.session import release_query_state
 
 ORACLED = frozenset(all_oracles())
 ALL_REGISTERED = sorted(all_queries())
@@ -34,9 +35,9 @@ COMPLEX = (T.ArrayType, T.MapType, T.StructType)
 @pytest.fixture(autouse=True)
 def _release(spark):
     # every test builds its own query; nothing is shared across tests
-    # except the session, so releasing per test is safe (conftest note)
+    # except the session, so releasing per test is safe
+    # (session.release_query_state note)
     yield
-    from conftest import release_query_state
     release_query_state(spark)
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from sparkit_learn_spark.registry import all_oracles, all_queries
+from sparkit_learn_spark.session import release_query_state
 from sparkit_learn_spark.testing import check_query, parity_tier
 
 # Fast tier (default, driver-completable): this suite checks the md5
@@ -20,9 +21,8 @@ ROWS_ONLY = sorted(set(all_queries()) - set(all_oracles()))
 def _release(spark):
     # every test builds + materializes its own query; release so
     # CacheManager entries and cached blocks don't accumulate across
-    # the sweep (conftest.release_query_state note)
+    # the sweep (session.release_query_state note)
     yield
-    from conftest import release_query_state
     release_query_state(spark)
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 
 from sparkit_learn_spark.registry import all_oracles
+from sparkit_learn_spark.session import release_query_state
 from sparkit_learn_spark.testing import check_query, duck_connect, parity_tier
 
 # The driver's correctness SF (directory name sf0.01 — do not "fix"
@@ -39,7 +40,6 @@ DEGENERACY_EXEMPT: dict[str, str] = {}
 def _release(spark):
     # per-test release, same rationale as test_oracle_parity.py
     yield
-    from conftest import release_query_state
     release_query_state(spark)
 
 

@@ -223,6 +223,13 @@ def test_viral_shingle_does_not_explode_candidates(spark):
     assert uncapped > 700
 
 
+def _rdd_ids(spark) -> set:
+    # id SETS, not counts: the async ContextCleaner may unpersist other
+    # tests' dead checkpoints between measurements, so an absolute size
+    # comparison is flaky in full-suite order
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_stable_sorted_ids_releases_intermediate_cache(spark, sf_dir):
     """Each call persists a sorted intermediate; it must be RELEASED
     before returning (lifecycle bug in round 2: one leaked cached
@@ -236,21 +243,47 @@ def test_stable_sorted_ids_releases_intermediate_cache(spark, sf_dir):
         .select(F.explode(F.split("text", " ")).alias("term"))
         .distinct()
     )
-    jsc = spark.sparkContext._jsc
-
-    def rdd_ids() -> set:
-        # id SETS, not counts: the async ContextCleaner may unpersist
-        # other tests' dead checkpoints between measurements, so an
-        # absolute size comparison is flaky in full-suite order
-        return set(jsc.getPersistentRDDs().keySet().toArray())
-
-    ids0 = rdd_ids()
+    ids0 = _rdd_ids(spark)
     out1 = stable_sorted_ids(terms, "term", num_partitions=7)
-    assert len(rdd_ids() - ids0) == 1
-    ids1 = rdd_ids()
+    assert len(_rdd_ids(spark) - ids0) == 1
+    ids1 = _rdd_ids(spark)
     out2 = stable_sorted_ids(terms, "term", num_partitions=7)
-    assert len(rdd_ids() - ids1) == 1
+    assert len(_rdd_ids(spark) - ids1) == 1
     assert out1.count() == out2.count()
+
+
+def test_release_query_state_drops_checkpoints_and_cache(spark, sf_dir):
+    """session.release_query_state frees what a query left behind: the
+    shingle index q_llm_decontaminate localCheckpoints at construction
+    and a persist()ed frame, both consumed first."""
+    from sparkit_learn_spark.registry import all_queries
+    from sparkit_learn_spark.session import release_query_state
+
+    ids0 = _rdd_ids(spark)
+    q = all_queries()["q_llm_decontaminate"](spark, sf_dir)
+    cached = load_table(spark, sf_dir, "documents").select("doc_id").persist()
+    q.write.format("noop").mode("overwrite").save()
+    assert cached.count() > 0
+    new = _rdd_ids(spark) - ids0
+    assert len(new) >= 2, new  # the checkpoint and the persisted frame
+
+    release_query_state(spark)
+    assert not (_rdd_ids(spark) & new)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_bench_time_query_returns_build_exec_pairs(spark, sf_dir):
+    import math
+
+    from bench import time_query
+    from sparkit_learn_spark.registry import all_queries
+
+    runs = time_query(spark, all_queries()["q_agg_q1"], sf_dir, runs=2)
+    assert len(runs) == 2
+    for pair in runs:
+        assert len(pair) == 2
+        assert all(isinstance(t, float) and math.isfinite(t) and t >= 0
+                   for t in pair)
 
 
 @pytest.mark.parametrize("sf", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])

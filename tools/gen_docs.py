@@ -65,14 +65,11 @@ def gen_operators(md_path: str) -> tuple[int, int]:
 
 
 def gen_plans(md_path: str) -> None:
-    from bench import HEADLINE
+    from bench import HEADLINE, warm_session
     from sparkit_learn_spark.plans.inspect import explain_str
     from sparkit_learn_spark.registry import all_queries
-    from sparkit_learn_spark.session import get_session
 
-    spark = get_session("gen-plans", master="local[8]",
-                        extra_confs={"spark.ui.enabled": "false"})
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = warm_session("gen-plans")
     qs = all_queries()
     plans: dict[str, str] = {}
     for name in HEADLINE:

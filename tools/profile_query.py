@@ -1,5 +1,5 @@
 """Per-query profiler for optimization rounds: times one or more
-queries with the noop sink (guide §1.4), labels jobs (§1.5), and dumps
+queries with bench.py's noop-sink loop, labels their jobs, and dumps
 `.explain("formatted")` to plans/<round>/<query>_<tag>.txt.
 
 Usage:
@@ -12,17 +12,17 @@ Prints one JSON line per query: {"query", "build_s", "exec_s" (best),
 from __future__ import annotations
 
 import argparse
-import contextlib
-import io
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
+from bench import time_query, warm_session  # noqa: E402
+from sparkit_learn_spark.plans.inspect import explain_str  # noqa: E402
 from sparkit_learn_spark.registry import all_queries  # noqa: E402
-from sparkit_learn_spark.session import get_session  # noqa: E402
+from sparkit_learn_spark.session import release_query_state  # noqa: E402
 
 
 def main() -> None:
@@ -34,48 +34,23 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_session("sparkit-profile", master=f"local[{cpus}]",
-                        extra_confs={"spark.ui.enabled": "false"})
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = warm_session("sparkit-profile", sf_dir)
+    sc = spark.sparkContext
     queries = all_queries()
-
-    from sparkit_learn_spark.catalog import load_table
-    load_table(spark, sf_dir, "lineitem").count()
-    load_table(spark, sf_dir, "orders").count()
-
-    plan_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", args.round)
+    plan_dir = os.path.join(REPO, "plans", args.round)
     for name in args.queries:
-        runs = []
-        build_best = float("inf")
-        df = None
-        for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            tb = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            build_best = min(build_best, t0 - tb)
-            spark.sparkContext.setJobDescription(None)
-        if args.tag and df is not None:
+        sc.setJobDescription(f"profile:{name}")
+        runs = time_query(spark, queries[name], sf_dir, args.runs)
+        if args.tag:
             os.makedirs(plan_dir, exist_ok=True)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
             with open(os.path.join(plan_dir, f"{name}_{args.tag}.txt"), "w") as f:
-                f.write(buf.getvalue())
-        print(json.dumps({"query": name, "build_s": round(build_best, 3),
-                          "exec_s": min(runs), "runs": runs}))
-        sys.stdout.flush()
-        # mirror bench.py's per-query state release (r11)
-        try:
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist(True)
-        except Exception:
-            pass
+                f.write(explain_str(queries[name](spark, sf_dir)))
+        sc.setJobDescription(None)
+        print(json.dumps({"query": name,
+                          "build_s": round(min(b for b, _ in runs), 3),
+                          "exec_s": round(min(e for _, e in runs), 3),
+                          "runs": [round(e, 3) for _, e in runs]}), flush=True)
+        release_query_state(spark)
     spark.stop()
 
 

@@ -22,12 +22,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_query, warm_session
 from sparkit_learn_spark.registry import all_queries
-from sparkit_learn_spark.session import get_session
+from sparkit_learn_spark.session import release_query_state
 
 #: queries whose work is inherently superlinear in corpus size (exact
 #: all-pairs); their sf1 ratio is expected > 1 by design and the scale
@@ -49,36 +49,18 @@ EXPECTED_SUPERLINEAR = {
 }
 
 
-def _fresh_session():
-    spark = get_session(
-        "scale-check", master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        extra_confs={"spark.ui.enabled": "false"})
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
 def run(small: str, big: str, factor: int, runs: int, only: str | None) -> dict:
-    spark = _fresh_session()
+    spark = warm_session("scale-check", small, big)
     queries = all_queries()
     prefixes = only.split(",") if only else None
     names = sorted(n for n in queries
                    if prefixes is None or any(n.startswith(p) for p in prefixes))
 
     def best_wall(name: str, sf_dir: str) -> float:
-        best = float("inf")
-        for _ in range(runs):
-            # t0 before plan build: eager-materializing operators
-            # (localCheckpoint pipelines) do real work there
-            t0 = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    # warm both directories' footers once
-    from sparkit_learn_spark.catalog import load_table
-    for d in (small, big):
-        load_table(spark, d, "lineitem").count()
+        # build + exec: eager-materializing operators (localCheckpoint
+        # pipelines) do real work during plan construction
+        return round(min(b + e for b, e in
+                         time_query(spark, queries[name], sf_dir, runs)), 3)
 
     out: dict[str, dict] = {}
     for i, name in enumerate(names, 1):
@@ -106,7 +88,10 @@ def run(small: str, big: str, factor: int, runs: int, only: str | None) -> dict:
                 SparkSession = type(spark)
                 SparkSession._instantiatedSession = None
                 SparkSession._activeSession = None
-                spark = _fresh_session()
+                spark = warm_session("scale-check")
+        # each query is measured on a clean cache, not on the state its
+        # predecessors persisted or checkpointed
+        release_query_state(spark)
         out[name] = row
         print(f"[{i}/{len(names)}] {name}: {row}", file=sys.stderr, flush=True)
     try:
